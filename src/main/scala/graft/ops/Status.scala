@@ -62,24 +62,34 @@ object Status {
     *
     * Works identically on a batch or a streaming `events` frame: the
     * stream-static joins are stateless and plan as BroadcastHashJoin when
-    * the dims are small/cached.
+    * the dims are small/cached. The streaming pipeline enriches through
+    * `graft.pipeline.DimensionLookup` instead, which emits the same columns
+    * from dimensions broadcast once per query.
     */
   def enrich(events: DataFrame, tributes: DataFrame, games: DataFrame): DataFrame =
-    events
+    derive(events
       .join(broadcast(tributes), Seq("tributeid"))
-      .join(broadcast(games), Seq("gameid"))
+      .join(broadcast(games), Seq("gameid")))
+
+  /** The five derived status columns, appended by column name to a frame
+    * that already carries the event measures and both dimensions'
+    * thresholds and bounds — the one copy of the CASE logic behind every
+    * enrichment path.
+    */
+  def derive(joined: DataFrame): DataFrame =
+    joined
       .withColumn("hydrationstatus",
-        hydrationStatus(events("hydrationlevel"), tributes("minHydrationThreshold")))
+        hydrationStatus(col("hydrationlevel"), col("minHydrationThreshold")))
       .withColumn("hungerstatus",
-        hungerStatus(events("hungerlevel"), tributes("maxHungerThreshold")))
+        hungerStatus(col("hungerlevel"), col("maxHungerThreshold")))
       .withColumn("painstatus",
-        painStatus(events("painlevel"), tributes("maxPainThreshold")))
-      .withColumn("status", aliveStatus(events("heartrate")))
+        painStatus(col("painlevel"), col("maxPainThreshold")))
+      .withColumn("status", aliveStatus(col("heartrate")))
       .withColumn("locationstatus",
         locationStatus(
-          events("xcoordinate"), events("ycoordinate"),
-          games("minXCoordinate"), games("maxXCoordinate"),
-          games("minYCoordinate"), games("maxYCoordinate")))
+          col("xcoordinate"), col("ycoordinate"),
+          col("minXCoordinate"), col("maxXCoordinate"),
+          col("minYCoordinate"), col("maxYCoordinate")))
 
   /** The 12 sink-side state-item columns: projection + rename + casts
     * (reference: script/TributeStreamingJob.py:52-65). Exposed as columns

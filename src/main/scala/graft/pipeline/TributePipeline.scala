@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -173,12 +174,16 @@ private[pipeline] final class SerializableHadoopConf(
   * (reference: script/TributeStreamingJob.py:101-146).
   *
   * Two sink variants:
-  *   - `run` (default): `foreachBatch` — batch-level last-writer-wins dedup
-  *     + bulk upserts instead of one external put per row (the reference's
-  *     5-WCU DynamoDB table was its de-facto output bottleneck). LWW is
-  *     EXPLICIT: an arrival-sequence column is stamped on the RAW source
-  *     batch before any transformation, and `row_number()` over it per key
-  *     picks the final event per tribute per micro-batch.
+  *   - `run` (default): `foreachBatch`, one Spark action per micro-batch.
+  *     The two dimensions are read once per query start, on its first data
+  *     batch, and broadcast as key → rows maps ([[DimensionLookup]]); each
+  *     batch is enriched against them partition by partition, with no join
+  *     and no per-batch broadcast. One fused pass then repartitions the
+  *     batch by tribute, writes every event's log object, and puts each
+  *     tribute's last-arriving event as its state item — the batch-level
+  *     last-writer-wins dedup that replaces the reference's one external
+  *     put per row (its 5-WCU DynamoDB table was its de-facto output
+  *     bottleneck). The arrival order LWW follows is explicit, see [[run]].
   *   - `runForeach`: per-row `ForeachWriter[Row]` parity sink — the direct
   *     mapping of the reference's `writeStream.foreach(write_data)`
   *     (script/TributeStreamingJob.py:78-82,139-144): one KV put + one log
@@ -194,6 +199,11 @@ object TributePipeline {
 
   /** Name of the arrival-sequence column stamped by the streaming runners. */
   val ArrivalSeqCol = "__arrival_seq"
+
+  // the source side of the streaming runners' arrival order, stamped at
+  // wiring time: a file's modification time (µs) and path
+  private val ArrivalMTimeCol = "__arrival_mtime"
+  private val ArrivalPathCol = "__arrival_path"
 
   private def hasShuffle(plan: SparkPlan): Boolean = {
     val searchRoot = plan match {
@@ -254,7 +264,7 @@ object TributePipeline {
     * before `to_json`. Strings render the value at its carried scale,
     * exactly as `str()` of the same decimal does.
     */
-  private def rowJson(enriched: DataFrame): Column = {
+  private[graft] def rowJson(enriched: DataFrame): Column = {
     val fields = enriched.schema.fields.toIndexedSeq.map { f =>
       if (f.dataType.isInstanceOf[DecimalType]) col(f.name).cast("string").as(f.name)
       else col(f.name)
@@ -262,50 +272,64 @@ object TributePipeline {
     to_json(struct(fields: _*))
   }
 
-  /** Append-only event-history log: one JSON object of the full enriched row
-    * per event, path-keyed by streamingeventid
-    * (reference: script/TributeStreamingJob.py:70-74, path data/<id>.json).
-    * Runs distributed — each partition writes its own rows' files; a re-run
-    * of the same batch overwrites the same paths (idempotent).
+  /** One event-history log object: the full enriched row's JSON,
+    * path-keyed by streamingeventid (reference:
+    * script/TributeStreamingJob.py:70-74, path data/<id>.json). An
+    * overwrite, so a re-run of the same event rewrites the same bytes.
     */
-  def appendEventLog(enriched: DataFrame, logDir: String): Unit = {
-    Files.createDirectories(Paths.get(logDir))
-    val jsonised = enriched.select(
-      col("streamingeventid").cast("string").as("__id"),
-      rowJson(enriched).as("__json"))
-    jsonised.foreachPartition { rows: Iterator[Row] =>
-      rows.foreach { r =>
-        val path = Paths.get(logDir, r.getString(0) + ".json")
-        Files.write(path, r.getString(1).getBytes(StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-          StandardOpenOption.WRITE)
-      }
-    }
+  private def writeLogObject(logDir: String, eventId: String, json: String): Unit = {
+    Files.write(Paths.get(logDir, eventId + ".json"), json.getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
+      StandardOpenOption.WRITE)
+    ()
   }
 
-  /** Upsert the batch's final state items into the KV store, from executor
-    * task threads (no driver-side collect).
-    */
-  def upsertState(stateItems: DataFrame, storeName: String): Unit = {
-    val cols = stateItems.columns
-    stateItems.foreachPartition { rows: Iterator[Row] =>
-      val store = KVRegistry.getOrCreate(storeName)
-      rows.foreach { r =>
-        val item = cols.zipWithIndex
-          .map { case (c, i) => c -> (if (r.isNullAt(i)) null else r.get(i).toString) }
-          .toMap
-        store.put(item("tributeId"), item)
-      }
-    }
+  /** Puts one state item, given as its 12-field struct, under its
+    * tributeId: every value stringified, nulls kept null. */
+  private def putStateItem(store: KVStore, st: Row): Unit = {
+    val item = st.schema.fieldNames.zipWithIndex
+      .map { case (n, i) => n -> (if (st.isNullAt(i)) null else st.get(i).toString) }
+      .toMap
+    store.put(item("tributeId"), item)
   }
 
-  /** Wire the continuous query: enrich → foreachBatch(upsert + append log),
+  /** Stamps the source side of the arrival order on the streaming frame.
+    * A file source carries `_metadata` (checked here, at wiring time), and
+    * its file's modification time and path are stamped; any other source
+    * (a broker frame, a decoded message stream, a memory stream) has no
+    * file to order by, and stamps constants.
+    */
+  private def stampSource(events: DataFrame): DataFrame = {
+    val mtime = col("_metadata.file_modification_time")
+    val path = col("_metadata.file_path")
+    if (Try(events.select(mtime, path).schema).isSuccess)
+      events.withColumn(ArrivalMTimeCol, unix_micros(mtime)).withColumn(ArrivalPathCol, path)
+    else
+      events.withColumn(ArrivalMTimeCol, lit(0L)).withColumn(ArrivalPathCol, lit(""))
+  }
+
+  /** Wire the continuous query: enrich → foreachBatch(append log + upsert),
     * checkpointed (reference: script/TributeStreamingJob.py:139-144).
     *
-    * The arrival sequence is stamped on the RAW batch, before enrichment or
-    * anything else, so the (shuffle-free) source scan's layout is the only
-    * thing it depends on; any downstream re-plan, repartition, or AQE
-    * coalesce merely carries the already-stamped values.
+    * Each data micro-batch runs ONE Spark action: a shuffle by tribute
+    * feeding one pass that writes the batch's log objects and puts its
+    * state items, so per tribute the log is written before the state. A
+    * retried task is idempotent: it rewrites the same path-keyed log
+    * objects and puts the same winners. `tributes` and `games` are read
+    * once per query start, when its first data batch builds the
+    * [[DimensionLookup]]; later changes to them are not seen until the
+    * query restarts.
+    *
+    * Last writer wins in arrival order, `(file modification time, file
+    * path, in-partition id)`: the file source hands a trigger's files over
+    * in modification-time order, so the latest file's event wins however
+    * the files are packed into partitions, and within a file the later
+    * record wins. The in-partition id (`monotonically_increasing_id`) is
+    * stamped on the RAW batch, before enrichment or anything else, so any
+    * downstream shuffle merely carries it. Sources without `_metadata`
+    * order by the in-partition id alone, which tracks arrival order only
+    * while one batch is one ordered partition (one shard, one file per
+    * trigger) — as the reference's single Kinesis shard is.
     */
   def run(
       streamingEvents: DataFrame,
@@ -314,29 +338,53 @@ object TributePipeline {
       storeName: String,
       logDir: String,
       checkpointDir: String): StreamingQuery = {
-    streamingEvents.writeStream
+    lazy val dims = DimensionLookup(tributes, games)
+    stampSource(streamingEvents).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, tributes, games, storeName, logDir)
+        processBatch(batch, dims, storeName, logDir)
       }
       .start()
   }
 
   private def processBatch(
       batch: DataFrame,
-      tributes: DataFrame,
-      games: DataFrame,
+      dims: DimensionLookup,
       storeName: String,
       logDir: String): Unit = {
-    if (!batch.isEmpty) {
-      val stamped = batch.withColumn(ArrivalSeqCol, monotonically_increasing_id())
-      val enriched = Status.enrich(stamped, tributes, games).persist()
-      try {
-        appendEventLog(enriched.drop(ArrivalSeqCol), logDir)
-        upsertState(latestStatePerTribute(enriched, col(ArrivalSeqCol)), storeName)
-      } finally { enriched.unpersist(); () }
+    val enriched = dims.enrich(batch.withColumn(ArrivalSeqCol, monotonically_increasing_id()))
+    val logged = enriched.drop(ArrivalMTimeCol, ArrivalPathCol, ArrivalSeqCol)
+    val payload = enriched.select(
+      col("tributeid").cast("string").as("__key"),
+      col(ArrivalMTimeCol), col(ArrivalPathCol), col(ArrivalSeqCol),
+      col("streamingeventid").cast("string"),
+      rowJson(logged),
+      struct(Status.stateItemCols: _*))
+    Files.createDirectories(Paths.get(logDir))
+    payload.repartition(col("__key")).foreachPartition { rows: Iterator[Row] =>
+      writeBatchPartition(rows, storeName, logDir)
     }
+  }
+
+  /** The fused sink of one shuffle partition, which holds every event of
+    * its tributes: each row's log object, then each tribute's
+    * last-arriving row as its state item. Payload layout: (key, mtime,
+    * path, seq, streamingeventid, full-row JSON, 12-field state struct).
+    */
+  private def writeBatchPartition(rows: Iterator[Row], storeName: String, logDir: String): Unit = {
+    def arrivedAfter(a: Row, b: Row): Boolean =
+      if (a.getLong(1) != b.getLong(1)) a.getLong(1) > b.getLong(1)
+      else if (a.getString(2) != b.getString(2)) a.getString(2) > b.getString(2)
+      else a.getLong(3) > b.getLong(3)
+    val latest = new java.util.HashMap[String, Row]()
+    rows.foreach { r =>
+      writeLogObject(logDir, r.getString(4), r.getString(5))
+      val prev = latest.get(r.getString(0))
+      if (prev == null || arrivedAfter(r, prev)) latest.put(r.getString(0), r)
+    }
+    val store = KVRegistry.getOrCreate(storeName)
+    latest.values.forEach(r => putStateItem(store, r.getStruct(6)))
   }
 
   /** The forget/tombstone side tables inherit the main store's
@@ -498,7 +546,8 @@ object TributePipeline {
       // before its writes — the only way to deterministically exercise an
       // erase landing mid-flight (production leaves the default no-op)
       onBatchAdmitted: () => Unit = () => ()): StreamingQuery = {
-    streamingEvents.writeStream
+    lazy val dims = DimensionLookup(tributes, games)
+    stampSource(streamingEvents).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -521,7 +570,7 @@ object TributePipeline {
               batch.col("tributeid").cast("string") === col("__forgotten_id"),
               "left_anti")
           }
-        processBatch(admitted, tributes, games, storeName, logDir)
+        processBatch(admitted, dims, storeName, logDir)
         // In-flight erase race (round-15 advice): an erase that landed
         // AFTER this batch's admission snapshot was taken saw a log/state
         // point-in-time that this batch's writes may have just re-polluted
@@ -553,15 +602,8 @@ object TributePipeline {
       true
     }
     override def process(r: Row): Unit = {
-      Files.write(Paths.get(logDir, r.getString(0) + ".json"),
-        r.getString(1).getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
-      val st = r.getStruct(2)
-      val item = st.schema.fieldNames.zipWithIndex
-        .map { case (n, i) => n -> (if (st.isNullAt(i)) null else st.get(i).toString) }
-        .toMap
-      store.put(item("tributeId"), item)
+      writeLogObject(logDir, r.getString(0), r.getString(1))
+      putStateItem(store, r.getStruct(2))
     }
     override def close(errorOrNull: Throwable): Unit = ()
   }

@@ -113,7 +113,7 @@ private final class KVDataWriter(schema: StructType, storeName: String, keyCol: 
   // InternalRow carries Catalyst-internal representations (timestamps as
   // micros longs, strings as UTF8String, dates as day ints); stringify the
   // EXTERNAL value so this path stores the same rendering as the Row-based
-  // foreachBatch/upsertState path for the same data
+  // TributePipeline writers for the same data
   private val toExternal = fields.map(f =>
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(f.dataType))
 

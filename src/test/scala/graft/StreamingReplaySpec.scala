@@ -37,6 +37,7 @@ class StreamingReplaySpec extends SparkSpec {
         ()
       }
 
+    var inputRows = 0L
     def runUntilDrained(): Unit = {
       val events = Sources.eventStream(spark, streamDir.toString)
       val tributes = Sources.tributeDim(spark, fixture("staticData/tributeData.csv"))
@@ -44,6 +45,7 @@ class StreamingReplaySpec extends SparkSpec {
       val q = TributePipeline.run(events, tributes, games, storeName, logDir, ckpt)
       q.processAllAvailable()
       q.stop()
+      inputRows += q.recentProgress.map(_.numInputRows).sum
     }
 
     val t0 = System.currentTimeMillis() - 60000
@@ -52,6 +54,8 @@ class StreamingReplaySpec extends SparkSpec {
 
     stage(batchOrder.drop(5), t0 + 10000)
     runUntilDrained() // recovery: same checkpoint resumes at batch 6
+    // the source reports each event once: one scan per micro-batch
+    assert(inputRows === 65, s"numInputRows summed to $inputRows over 65 events")
 
     // event log: one JSON file per streamingeventid
     val logged = Files.list(Paths.get(logDir)).count()
@@ -78,6 +82,163 @@ class StreamingReplaySpec extends SparkSpec {
       s"decimal must be a JSON string, got: $logged1")
     assert(logged1.contains("\"xcoordinate\":\"50.00\""), s"got: $logged1")
     assert(!logged1.contains("\"heartrate\":70"), s"got: $logged1")
+  }
+
+  /** The full 16-item golden state, from the batch path with a
+    * data-derived arrival sequence (FlagshipBatchSpec pins it): batch
+    * ordinal in the send order, then the event's ordinal in its batch. */
+  private lazy val goldenState: Map[String, Map[String, String]] = {
+    import org.apache.spark.sql.functions._
+    val stamped = batchOrder.zipWithIndex.map { case (b, i) =>
+      Sources.eventBatch(spark, fixture(s"streamingData/$b.json"))
+        .withColumn("__seq", lit(i.toLong * 1000000L) +
+          regexp_extract(col("streamingeventid"), "Event(\\d+)$", 1).cast("long"))
+    }.reduce(_ unionAll _)
+    val state = TributePipeline.latestStatePerTribute(
+      graft.ops.Status.enrich(stamped,
+        Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
+        Sources.gameDim(spark, fixture("staticData/gameData.json"))),
+      col("__seq"))
+    state.collect().map { r =>
+      r.getString(0) -> state.columns.indices.map { i =>
+        state.columns(i) -> (if (r.isNullAt(i)) null else r.get(i).toString)
+      }.toMap
+    }.toMap
+  }
+
+  /** Copies the 9 fixture batches into a new stream directory, their
+    * modification times ascending in the documented send order. */
+  private def stageAll(prefix: String): Path = {
+    val streamDir = Files.createDirectories(Files.createTempDirectory(prefix).resolve("stream"))
+    val t0 = System.currentTimeMillis() - 60000
+    batchOrder.zipWithIndex.foreach { case (n, i) =>
+      val dst = streamDir.resolve(s"$n.json")
+      Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst)
+      dst.toFile.setLastModified(t0 + i * 1000)
+      ()
+    }
+    streamDir
+  }
+
+  for (filesPerTrigger <- Seq(9, 3))
+    test(s"last writer wins across files in one trigger: $filesPerTrigger files per trigger converge to the golden state") {
+      // the file source packs a trigger's files into partitions by size,
+      // not by modification time, so only the (mtime, path, in-partition
+      // id) arrival order picks each tribute's latest event here
+      assert(goldenState.size === 16)
+      val streamDir = stageAll(s"graft-lww-$filesPerTrigger")
+      val base = streamDir.getParent
+      val logDir = base.resolve("eventlog").toString
+      val storeName = s"lww-$filesPerTrigger-${System.nanoTime()}"
+      val q = TributePipeline.run(
+        Sources.eventStream(spark, streamDir.toString, filesPerTrigger),
+        Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
+        Sources.gameDim(spark, fixture("staticData/gameData.json")),
+        storeName, logDir, base.resolve("checkpoint").toString)
+      q.processAllAvailable()
+      q.stop()
+
+      val state = KVRegistry.getOrCreate(storeName).snapshot()
+      val wrong = goldenState.keySet.filter(k => state.get(k) != goldenState.get(k))
+      assert(state.keySet === goldenState.keySet && wrong.isEmpty,
+        s"tributes off the golden state: ${wrong.toSeq.sorted.map(k => k -> state.get(k))}")
+      assert(Files.list(Paths.get(logDir)).count() === 65)
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.length === (9 + filesPerTrigger - 1) / filesPerTrigger)
+      assert(batches.map(_.numInputRows).sum === 65)
+    }
+
+  test("micro-batch shape: one action per data batch, dimensions read once per query (typed plan checks)") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
+    }
+    val fence = "graft.test.fence"
+    val jobs = new ConcurrentLinkedQueue[(String, Long)]() // (query id, batch id)
+    val fences = new java.util.concurrent.atomic.AtomicInteger(0)
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobListener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = j.properties
+        if (p != null && p.getProperty(fence) != null) { fences.incrementAndGet(); () }
+        else if (p != null && p.getProperty("sql.streaming.queryId") != null) {
+          jobs.add((p.getProperty("sql.streaming.queryId"),
+            p.getProperty("streaming.sql.batchId").toLong))
+          ()
+        }
+      }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the listener bus is FIFO: once a fence job's start is seen, every
+    // job and SQL execution before it has been delivered
+    def drainedPlans(): Seq[SparkPlan] = {
+      val seen = fences.get()
+      spark.sparkContext.setLocalProperty(fence, "1")
+      try spark.sparkContext.parallelize(1 to 1, 1).count()
+      finally spark.sparkContext.setLocalProperty(fence, null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (fences.get() == seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      Iterator.continually(plans.poll()).takeWhile(_ != null).toSeq
+    }
+
+    val base = Files.createTempDirectory("graft-shape")
+    val streamDir = Files.createDirectory(base.resolve("stream"))
+    val q = TributePipeline.run(
+      Sources.eventStream(spark, streamDir.toString),
+      Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
+      Sources.gameDim(spark, fixture("staticData/gameData.json")),
+      s"shape-${System.nanoTime()}", base.resolve("eventlog").toString,
+      base.resolve("checkpoint").toString)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val perBatch = try {
+      drainedPlans()
+      val t0 = System.currentTimeMillis() - 60000
+      batchOrder.take(4).zipWithIndex.map { case (n, i) =>
+        val dst = streamDir.resolve(s"$n.json")
+        Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst)
+        dst.toFile.setLastModified(t0 + i * 1000)
+        q.processAllAvailable()
+        drainedPlans()
+      }
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+
+    val byBatch = jobs.asScala.filter(_._1 == q.id.toString).groupBy(_._2)
+      .map { case (b, js) => b -> js.size }
+    assert(byBatch.keySet === Set(0L, 1L, 2L, 3L), s"jobs by batch: $byBatch")
+    // the first data batch reads the two dimensions, one job each
+    assert(byBatch(0L) <= 4, s"jobs by batch: $byBatch")
+    assert((1L to 3L).forall(b => byBatch(b) <= 2), s"jobs by batch: $byBatch")
+
+    val scans = perBatch.map(_.flatMap(nodes).count(_.isInstanceOf[InMemoryTableScanExec]))
+    assert(scans === Seq(2, 0, 0, 0),
+      s"each dimension is read once, on the first data batch: $scans")
+    perBatch.zipWithIndex.foreach { case (ps, b) =>
+      val all = ps.flatMap(nodes)
+      assert(!all.exists(_.isInstanceOf[BroadcastExchangeLike]),
+        s"batch $b rebroadcast a dimension:\n${ps.mkString("\n")}")
+      assert(!all.exists(_.isInstanceOf[CollectLimitExec]),
+        s"batch $b probed for emptiness:\n${ps.mkString("\n")}")
+    }
   }
 
   test("per-row ForeachWriter parity sink converges to the same golden state") {
