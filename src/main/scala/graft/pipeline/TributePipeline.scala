@@ -13,9 +13,10 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, MapType, StringType}
 
 import graft.ops.Status
+import graft.streaming.LocalCheckpointFileManager
 
 /** Keyed last-writer-wins state sink — the engine-side equivalent of the
   * reference's DynamoDB `put_item` keyed on tributeId
@@ -31,6 +32,16 @@ trait KVStore extends Serializable {
     * `delete_item` in the reference's deployment). Idempotent: deleting
     * an absent key is a no-op. */
   def delete(key: String): Unit
+}
+
+object KVStore {
+  /** A row as a store item: each field by name, its external value
+    * stringified, nulls kept null. The one Row → item conversion of every
+    * state-write path, so they all store the same rendering. */
+  def item(row: Row): Map[String, String] =
+    row.schema.fieldNames.zipWithIndex
+      .map { case (n, i) => n -> (if (row.isNullAt(i)) null else row.get(i).toString) }
+      .toMap
 }
 
 /** In-memory KV store for local mode and tests. In local[*] executors share
@@ -285,11 +296,9 @@ object TributePipeline {
   }
 
   /** Puts one state item, given as its 12-field struct, under its
-    * tributeId: every value stringified, nulls kept null. */
+    * tributeId. */
   private def putStateItem(store: KVStore, st: Row): Unit = {
-    val item = st.schema.fieldNames.zipWithIndex
-      .map { case (n, i) => n -> (if (st.isNullAt(i)) null else st.get(i).toString) }
-      .toMap
+    val item = KVStore.item(st)
     store.put(item("tributeId"), item)
   }
 
@@ -330,6 +339,13 @@ object TributePipeline {
     * order by the in-partition id alone, which tracks arrival order only
     * while one batch is one ordered partition (one shard, one file per
     * trigger) — as the reference's single Kinesis shard is.
+    *
+    * The query's checkpoint commits (the source, offset and commit logs of
+    * every micro-batch) go through [[LocalCheckpointFileManager]], unless
+    * the session names its own manager: on a local (`file:`) checkpoint
+    * they start no process, and any other scheme commits through Spark's
+    * default manager, unchanged. [[runGoverned]] and [[runForeach]] do the
+    * same.
     */
   def run(
       streamingEvents: DataFrame,
@@ -339,6 +355,7 @@ object TributePipeline {
       logDir: String,
       checkpointDir: String): StreamingQuery = {
     lazy val dims = DimensionLookup(tributes, games)
+    LocalCheckpointFileManager.install(streamingEvents.sparkSession)
     stampSource(streamingEvents).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
@@ -499,9 +516,14 @@ object TributePipeline {
         dfs.listFiles(logPath, false).hasNext
       if (!hasFiles) Map.empty
       else {
-        val matches = s.read.json(logDir)
-          .select(col("tributeid").cast("string").as("tid"),
-            input_file_name().as("path"))
+        // each object is one line of JSON; only its key is read, under any
+        // spelling of `tributeid` (the event frame's column name), with no
+        // schema inference over the whole log
+        val fields = from_json(col("value"), MapType(StringType, StringType))
+        val tid = try_element_at(
+          map_values(map_filter(fields, (k, _) => lower(k) === "tributeid")), lit(1))
+        val matches = s.read.text(logDir)
+          .select(tid.as("tid"), input_file_name().as("path"))
           .filter(col("tid").isin(victims: _*))
         val confBc = s.sparkContext.broadcast(
           new SerializableHadoopConf(s.sparkContext.hadoopConfiguration))
@@ -547,6 +569,7 @@ object TributePipeline {
       // erase landing mid-flight (production leaves the default no-op)
       onBatchAdmitted: () => Unit = () => ()): StreamingQuery = {
     lazy val dims = DimensionLookup(tributes, games)
+    LocalCheckpointFileManager.install(streamingEvents.sparkSession)
     stampSource(streamingEvents).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
@@ -627,6 +650,7 @@ object TributePipeline {
       col("streamingeventid").cast("string"),
       rowJson(enriched),
       struct(Status.stateItemCols: _*))
+    LocalCheckpointFileManager.install(streamingEvents.sparkSession)
     payload.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

@@ -2,7 +2,8 @@ package graft.sinks
 
 import java.util.{Map => JuMap, Set => JuSet}
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.model.Schemas
-import graft.pipeline.KVRegistry
+import graft.pipeline.{KVRegistry, KVStore}
 
 /** DataSource V2 writer for the keyed last-writer-wins state table — the
   * connector-shaped stand-in for the reference's DynamoDB sink
@@ -108,24 +109,14 @@ private final class KVWriterFactory(schema: StructType, storeName: String, keyCo
 private final class KVDataWriter(schema: StructType, storeName: String, keyCol: String)
   extends DataWriter[InternalRow] {
   private val store = KVRegistry.getOrCreate(storeName)
-  private val fields = schema.fields
-  private val keyIdx = schema.fieldIndex(keyCol)
   // InternalRow carries Catalyst-internal representations (timestamps as
-  // micros longs, strings as UTF8String, dates as day ints); stringify the
-  // EXTERNAL value so this path stores the same rendering as the Row-based
-  // TributePipeline writers for the same data
-  private val toExternal = fields.map(f =>
-    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(f.dataType))
+  // micros longs, strings as UTF8String, dates as day ints); the external
+  // Row is stringified exactly as the Row-based TributePipeline writers do
+  private val toRow = CatalystTypeConverters.createToScalaConverter(schema)
 
   override def write(row: InternalRow): Unit = {
-    val item = fields.indices.map { i =>
-      fields(i).name ->
-        (if (row.isNullAt(i)) null
-         else toExternal(i)(row.get(i, fields(i).dataType)).toString)
-    }.toMap
-    val key = if (row.isNullAt(keyIdx)) null
-      else toExternal(keyIdx)(row.get(keyIdx, fields(keyIdx).dataType)).toString
-    store.put(key, item)
+    val item = KVStore.item(toRow(row).asInstanceOf[Row])
+    store.put(item(keyCol), item)
   }
 
   private object Done extends WriterCommitMessage

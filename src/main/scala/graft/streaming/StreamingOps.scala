@@ -403,13 +403,16 @@ object StreamingOps {
     * (graft.operators.Corpus.hashBucket of `idCol`), so stream and batch
     * curation agree row-for-row. The parquet sink's transactional file
     * log + checkpoint make the append exactly-once across restarts, and
-    * downstream training reads still prune to one split directory.
+    * downstream training reads still prune to one split directory. Local
+    * checkpoint and sink-log commits start no process
+    * ([[LocalCheckpointFileManager.install]]).
     */
   def writeCuratedStream(
       docs: DataFrame,
       idCol: String,
       outDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    LocalCheckpointFileManager.install(docs.sparkSession)
     docs
       .withColumn("split",
         when(graft.operators.Corpus.hashBucket(col(idCol)) < 80, "train")
@@ -422,6 +425,7 @@ object StreamingOps {
       .partitionBy("split")
       .outputMode(OutputMode.Append())
       .start()
+  }
 
   /** Continuous-ingestion near-dup detection: flag each arriving document
     * that is a MinHash-LSH near-duplicate of a STATIC reference corpus —

@@ -5,8 +5,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
+import org.scalatest.BeforeAndAfterAll
 
-import graft.streaming.{Ev, StreamingOps}
+import graft.streaming.{Ev, LocalCheckpointFileManager, StreamingOps}
 
 /** Minimal curated-corpus row for the streaming writer test. */
 case class StreamDoc(doc_id: Long, text: String, lang: String)
@@ -21,7 +22,14 @@ case class StreamEmb(vec_id: Long, embedding: Seq[Float], ts: Timestamp)
   * (MemoryStream source, memory sink), including watermark-driven late-row
   * dropping and engine-side keyed state.
   */
-class StreamingOpsSpec extends SparkSpec {
+class StreamingOpsSpec extends SparkSpec with BeforeAndAfterAll {
+
+  // the stateful operators' state-store and metadata files commit through
+  // graft's local checkpoint manager, whichever suite ran first
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    LocalCheckpointFileManager.install(spark)
+  }
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

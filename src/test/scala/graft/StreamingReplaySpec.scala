@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import graft.pipeline.{KVRegistry, TributePipeline}
 import graft.sources.Sources
 
@@ -106,18 +108,105 @@ class StreamingReplaySpec extends SparkSpec {
     }.toMap
   }
 
-  /** Copies the 9 fixture batches into a new stream directory, their
-    * modification times ascending in the documented send order. */
-  private def stageAll(prefix: String): Path = {
-    val streamDir = Files.createDirectories(Files.createTempDirectory(prefix).resolve("stream"))
-    val t0 = System.currentTimeMillis() - 60000
-    batchOrder.zipWithIndex.foreach { case (n, i) =>
+  /** Copies fixture batches into `streamDir`, their modification times
+    * ascending from `t0` in the given order. */
+  private def stageFiles(streamDir: Path, names: Seq[String], t0: Long): Unit =
+    names.zipWithIndex.foreach { case (n, i) =>
       val dst = streamDir.resolve(s"$n.json")
       Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst)
       dst.toFile.setLastModified(t0 + i * 1000)
       ()
     }
+
+  /** Copies the 9 fixture batches into a new stream directory, their
+    * modification times ascending in the documented send order. */
+  private def stageAll(prefix: String): Path = {
+    val streamDir = Files.createDirectories(Files.createTempDirectory(prefix).resolve("stream"))
+    stageFiles(streamDir, batchOrder, System.currentTimeMillis() - 60000)
     streamDir
+  }
+
+  private def runIn(
+      s: org.apache.spark.sql.SparkSession,
+      streamDir: Path,
+      storeName: String,
+      base: Path): org.apache.spark.sql.streaming.StreamingQuery =
+    TributePipeline.run(
+      Sources.eventStream(s, streamDir.toString),
+      Sources.tributeDim(s, fixture("staticData/tributeData.csv")),
+      Sources.gameDim(s, fixture("staticData/gameData.json")),
+      storeName, base.resolve("eventlog").toString, base.resolve("checkpoint").toString)
+
+  for (defaultFirst <- Seq(true, false)) {
+    val (from, to) = if (defaultFirst) ("Spark's default", "graft's") else ("graft's", "Spark's default")
+    test(s"a replay checkpoint begun under $from checkpoint manager resumes under $to") {
+      import graft.streaming.LocalCheckpointFileManager.ClassKey
+      val sparkDefault = classOf[
+        org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName
+      // a session of its own, so the manager choice stays in this test
+      val s = spark.newSession()
+      val base = Files.createTempDirectory("graft-cfm-restart")
+      val streamDir = Files.createDirectory(base.resolve("stream"))
+      val storeName = s"cfm-restart-$defaultFirst-${System.nanoTime()}"
+      def drain(): Unit = {
+        val q = runIn(s, streamDir, storeName, base)
+        q.processAllAvailable()
+        q.stop()
+      }
+      val t0 = System.currentTimeMillis() - 60000
+      if (defaultFirst) s.conf.set(ClassKey, sparkDefault)
+      stageFiles(streamDir, batchOrder.take(5), t0)
+      drain() // batches 0-4
+      if (defaultFirst) s.conf.unset(ClassKey) else s.conf.set(ClassKey, sparkDefault)
+      stageFiles(streamDir, batchOrder.drop(5), t0 + 10000)
+      drain() // batches 5-8, resumed from the same checkpoint
+
+      // only Spark's default manager writes checksum files: each offset
+      // file committed under it has one, and none committed under graft's
+      val crcs = Files.list(base.resolve("checkpoint").resolve("offsets")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".crc")).toSet
+      val defaultBatches = if (defaultFirst) 0 to 4 else 5 to 8
+      assert(crcs === defaultBatches.map(b => s".$b.crc").toSet)
+
+      val state = KVRegistry.getOrCreate(storeName).snapshot()
+      assert(state === goldenState)
+      assert(Files.list(base.resolve("eventlog")).count() === 65)
+    }
+  }
+
+  test("local checkpoint commits start no process (JFR jdk.ProcessStart over a replay)") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val base = Files.createTempDirectory("graft-forks")
+    val streamDir = Files.createDirectory(base.resolve("stream"))
+    val t0 = System.currentTimeMillis() - 60000
+    stageFiles(streamDir, batchOrder.take(1), t0)
+    val q = runIn(spark, streamDir, s"forks-${System.nanoTime()}", base)
+    val rec = new Recording()
+    val dump = base.resolve("forks.jfr")
+    try {
+      q.processAllAvailable() // the first batch creates the checkpoint
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      stageFiles(streamDir, batchOrder.slice(1, 4), t0 + 1000)
+      q.processAllAvailable()
+      // the control: a process this test starts itself is recorded
+      new ProcessBuilder("true").start().waitFor()
+      rec.stop()
+      rec.dump(dump)
+    } finally {
+      q.stop()
+      rec.close()
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) === 4)
+    val starts = RecordingFile.readAllEvents(dump).asScala.toSeq
+    assert(starts.exists(_.getString("command") == "true"), "the recording missed the control process")
+    val streaming = starts.filter { e =>
+      e.getStackTrace != null && e.getStackTrace.getFrames.asScala.exists(
+        _.getMethod.getType.getName.startsWith("org.apache.spark.sql.execution.streaming"))
+    }
+    assert(streaming.isEmpty, s"${streaming.size} processes started from the streaming engine, e.g. " +
+      streaming.take(2).map(e => e.getString("command") + "\n" + e.getStackTrace).mkString("\n"))
   }
 
   for (filesPerTrigger <- Seq(9, 3))
@@ -150,7 +239,6 @@ class StreamingReplaySpec extends SparkSpec {
 
   test("micro-batch shape: one action per data batch, dimensions read once per query (typed plan checks)") {
     import java.util.concurrent.ConcurrentLinkedQueue
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -491,6 +579,37 @@ class StreamingReplaySpec extends SparkSpec {
       TributePipeline.tombstoneStoreName(storeName)).snapshot()
     assert(tomb("3")("residualState") === "false" &&
       tomb("3")("residualLog") === "0")
+  }
+
+  test("forgetTributes finds the key under the event frame's own spelling (a tributeId-keyed log)") {
+    import org.apache.spark.sql.functions.col
+    val base = Files.createTempDirectory("graft-forget-case")
+    val streamDir = Files.createDirectory(base.resolve("stream"))
+    val logDir = base.resolve("eventlog").toString
+    val storeName = s"forget-case-${System.nanoTime()}"
+    stageFiles(streamDir, batchOrder.take(5), System.currentTimeMillis() - 60000)
+    val q = TributePipeline.run(
+      Sources.eventStream(spark, streamDir.toString).withColumnRenamed("tributeid", "tributeId"),
+      Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
+      Sources.gameDim(spark, fixture("staticData/gameData.json")),
+      storeName, logDir, base.resolve("checkpoint").toString)
+    q.processAllAvailable()
+    q.stop()
+
+    val one = new String(Files.readAllBytes(Paths.get(logDir, "preCornucopiaEvent1.json")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(one.contains("\"tributeId\":") && !one.contains("\"tributeid\":"), one)
+    val logsBefore = Files.list(Paths.get(logDir)).count()
+    // an inferred schema resolves the column case-insensitively
+    val catoBefore = spark.read.json(logDir).filter(col("tributeid") === "3").count()
+    assert(catoBefore > 0, "the fixture must contain victim events")
+
+    val audit = TributePipeline.forgetTributes(spark, Seq("3"), storeName, logDir)
+      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getLong(2),
+        r.getBoolean(3), r.getLong(4)))
+    assert(audit.toSeq === Seq(("3", true, catoBefore, false, 0L)))
+    assert(Files.list(Paths.get(logDir)).count() === logsBefore - catoBefore)
+    assert(spark.read.json(logDir).filter(col("tributeid") === "3").count() === 0)
   }
 
   test("forgetTributes mid-flight: an erase racing an in-flight batch leaves zero residuals without quiesce") {
