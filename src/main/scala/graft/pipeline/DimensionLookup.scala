@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.ops.Status
@@ -22,6 +24,11 @@ import graft.ops.Status
   * columns are the join's, in the join's order: the event's `gameid` and
   * `tributeid` (the event's spelling), the event's other columns, the
   * tribute dimension's non-key columns, then the game dimension's.
+  *
+  * The join itself is one function over Catalyst rows, [[rowJoin]]: the
+  * streaming pipeline runs it inside its compiled micro-batch
+  * ([[FlagshipPayload]]), and [[enrich]] wraps the same function as a
+  * DataFrame for batch callers.
   */
 final class DimensionLookup private (
     tributeKeyType: DataType,
@@ -30,40 +37,58 @@ final class DimensionLookup private (
     gameFields: Seq[StructField],
     maps: Broadcast[DimensionLookup.Maps]) {
 
-  /** `Status.enrich`'s output, without a join in the plan: the hash join
-    * against both maps plus the five derived status columns. */
-  def enrich(events: DataFrame): DataFrame = Status.derive(join(events))
+  /** `Status.enrich`'s output, without a join in the plan: [[rowJoin]]
+    * over each partition plus the five derived status columns. */
+  def enrich(events: DataFrame): DataFrame = {
+    val in = events.schema
+    val join = rowJoin(in)
+    Status.derive(events.mapPartitions { rows: Iterator[Row] =>
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(in)
+      val toRow = CatalystTypeConverters.createToScalaConverter(join.schema)
+      rows.flatMap(r => join(toInternal(r).asInstanceOf[InternalRow]))
+        .map(toRow(_).asInstanceOf[Row])
+    }(Encoders.row(join.schema)))
+  }
 
-  /** Hash-joins each partition of `events` against both broadcast maps. */
-  private def join(events: DataFrame): DataFrame = {
-    val fields = events.schema.fields
-    val t = DimensionLookup.keyIndex(events.schema, "tributeid")
-    val g = DimensionLookup.keyIndex(events.schema, "gameid")
+  /** The hash join of rows of schema `events` against both broadcast maps. */
+  private[pipeline] def rowJoin(events: StructType): DimensionLookup.RowJoin = {
+    val fields = events.fields
+    val t = DimensionLookup.keyIndex(events, "tributeid")
+    val g = DimensionLookup.keyIndex(events, "gameid")
     require(fields(t).dataType == tributeKeyType && fields(g).dataType == gameKeyType,
       s"event keys (${fields(t).dataType}, ${fields(g).dataType}) must have the " +
         s"dimension key types ($tributeKeyType, $gameKeyType)")
     val rest = fields.indices.filter(i => i != t && i != g).toArray
     val schema = StructType(
       Seq(fields(g), fields(t)) ++ rest.map(fields(_)) ++ tributeFields ++ gameFields)
-    val bc = maps
-    events.mapPartitions { rows: Iterator[Row] =>
-      val (tributes, games) = bc.value
-      rows.flatMap { r =>
-        val ts = if (r.isNullAt(t)) Array.empty[Array[Any]] else tributes.getOrElse(r.get(t), Array.empty)
-        val gs = if (r.isNullAt(g)) Array.empty[Array[Any]] else games.getOrElse(r.get(g), Array.empty)
-        if (ts.isEmpty || gs.isEmpty) Iterator.empty
-        else {
-          val event = Array[Any](r.get(g), r.get(t)) ++ rest.map(r.get)
-          for (tv <- ts.iterator; gv <- gs.iterator) yield Row(event ++ tv ++ gv: _*)
-        }
-      }
-    }(Encoders.row(schema))
+    new DimensionLookup.RowJoin(fields.map(_.dataType), t, g, rest, maps, schema)
   }
 }
 
 object DimensionLookup {
-  /** Per dimension: key value → the non-key values of every row with it. */
+  /** Per dimension: key value → the non-key values of every row with it,
+    * all in Catalyst's internal form. */
   type Maps = (Map[Any, Array[Array[Any]]], Map[Any, Array[Array[Any]]])
+
+  /** One event row → its joined rows, of `schema`, in Catalyst's internal
+    * form. A joined row may share values with its event row, so it must be
+    * consumed (projected or converted) before the next event row is read. */
+  final class RowJoin private[DimensionLookup] (
+      types: Array[DataType], t: Int, g: Int, rest: Array[Int],
+      maps: Broadcast[Maps], val schema: StructType)
+    extends (InternalRow => Iterator[InternalRow]) with Serializable {
+
+    def apply(r: InternalRow): Iterator[InternalRow] = {
+      val (tributes, games) = maps.value
+      val ts = if (r.isNullAt(t)) Array.empty[Array[Any]] else tributes.getOrElse(r.get(t, types(t)), Array.empty)
+      val gs = if (r.isNullAt(g)) Array.empty[Array[Any]] else games.getOrElse(r.get(g, types(g)), Array.empty)
+      if (ts.isEmpty || gs.isEmpty) Iterator.empty
+      else {
+        val event = Array[Any](r.get(g, types(g)), r.get(t, types(t))) ++ rest.map(i => r.get(i, types(i)))
+        for (tv <- ts.iterator; gv <- gs.iterator) yield new GenericInternalRow(event ++ tv ++ gv)
+      }
+    }
+  }
 
   /** Collects both dimensions (one job each) and broadcasts them. */
   def apply(tributes: DataFrame, games: DataFrame): DimensionLookup = {
@@ -76,8 +101,9 @@ object DimensionLookup {
       : (DataType, Seq[StructField], Map[Any, Array[Array[Any]]]) = {
     val k = keyIndex(dim.schema, key)
     val rest = dim.schema.indices.filter(_ != k)
-    val byKey = dim.collect().toSeq.filterNot(_.isNullAt(k)).groupBy(_.get(k))
-      .map { case (v, rows) => v -> rows.map(r => rest.map(r.get).toArray).toArray }
+    val internal = dim.schema.fields.map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType))
+    val byKey = dim.collect().toSeq.filterNot(_.isNullAt(k)).groupBy(r => internal(k)(r.get(k)))
+      .map { case (v, rows) => v -> rows.map(r => rest.map(i => internal(i)(r.get(i))).toArray).toArray }
     (dim.schema(k).dataType, rest.map(dim.schema(_)), byKey)
   }
 

@@ -6,14 +6,16 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame, ForeachWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DecimalType, MapType, StringType}
+import org.apache.spark.sql.types.{DecimalType, MapType, StringType, StructType}
 
 import graft.ops.Status
 import graft.streaming.LocalCheckpointFileManager
@@ -185,16 +187,18 @@ private[pipeline] final class SerializableHadoopConf(
   * (reference: script/TributeStreamingJob.py:101-146).
   *
   * Two sink variants:
-  *   - `run` (default): `foreachBatch`, one Spark action per micro-batch.
-  *     The two dimensions are read once per query start, on its first data
-  *     batch, and broadcast as key → rows maps ([[DimensionLookup]]); each
-  *     batch is enriched against them partition by partition, with no join
-  *     and no per-batch broadcast. One fused pass then repartitions the
-  *     batch by tribute, writes every event's log object, and puts each
-  *     tribute's last-arriving event as its state item — the batch-level
-  *     last-writer-wins dedup that replaces the reference's one external
-  *     put per row (its 5-WCU DynamoDB table was its de-facto output
-  *     bottleneck). The arrival order LWW follows is explicit, see [[run]].
+  *   - `run` (default): `foreachBatch`, one Spark job per micro-batch,
+  *     planned once per query. On its first data batch the two dimensions
+  *     are read and broadcast as key → rows maps ([[DimensionLookup]]) and
+  *     the batch payload is planned ([[FlagshipPayload]]); each batch is
+  *     then enriched against the maps partition by partition, with no join,
+  *     no per-batch broadcast and no per-batch Catalyst planning. One fused
+  *     pass then shuffles the batch by tribute, writes every event's log
+  *     object, and puts each tribute's last-arriving event as its state
+  *     item — the batch-level last-writer-wins dedup that replaces the
+  *     reference's one external put per row (its 5-WCU DynamoDB table was
+  *     its de-facto output bottleneck). The arrival order LWW follows is
+  *     explicit, see [[run]].
   *   - `runForeach`: per-row `ForeachWriter[Row]` parity sink — the direct
   *     mapping of the reference's `writeStream.foreach(write_data)`
   *     (script/TributeStreamingJob.py:78-82,139-144): one KV put + one log
@@ -213,8 +217,8 @@ object TributePipeline {
 
   // the source side of the streaming runners' arrival order, stamped at
   // wiring time: a file's modification time (µs) and path
-  private val ArrivalMTimeCol = "__arrival_mtime"
-  private val ArrivalPathCol = "__arrival_path"
+  private[pipeline] val ArrivalMTimeCol = "__arrival_mtime"
+  private[pipeline] val ArrivalPathCol = "__arrival_path"
 
   private def hasShuffle(plan: SparkPlan): Boolean = {
     val searchRoot = plan match {
@@ -308,7 +312,7 @@ object TributePipeline {
     * (a broker frame, a decoded message stream, a memory stream) has no
     * file to order by, and stamps constants.
     */
-  private def stampSource(events: DataFrame): DataFrame = {
+  private[graft] def stampSource(events: DataFrame): DataFrame = {
     val mtime = col("_metadata.file_modification_time")
     val path = col("_metadata.file_path")
     if (Try(events.select(mtime, path).schema).isSuccess)
@@ -320,25 +324,28 @@ object TributePipeline {
   /** Wire the continuous query: enrich → foreachBatch(append log + upsert),
     * checkpointed (reference: script/TributeStreamingJob.py:139-144).
     *
-    * Each data micro-batch runs ONE Spark action: a shuffle by tribute
-    * feeding one pass that writes the batch's log objects and puts its
+    * The query is planned once: its first data batch reads `tributes` and
+    * `games` into a [[DimensionLookup]] and has Catalyst plan the batch
+    * payload (enrichment, status columns, log JSON and state item) into a
+    * [[FlagshipPayload]]. Later changes to the dimensions are not seen
+    * until the query restarts. Every data micro-batch then runs ONE Spark
+    * job over the rows the engine already planned, with no planning of its
+    * own: the payload is computed partition by partition, shuffled by
+    * tribute, and one pass writes the batch's log objects and puts its
     * state items, so per tribute the log is written before the state. A
     * retried task is idempotent: it rewrites the same path-keyed log
-    * objects and puts the same winners. `tributes` and `games` are read
-    * once per query start, when its first data batch builds the
-    * [[DimensionLookup]]; later changes to them are not seen until the
-    * query restarts.
+    * objects and puts the same winners.
     *
     * Last writer wins in arrival order, `(file modification time, file
     * path, in-partition id)`: the file source hands a trigger's files over
     * in modification-time order, so the latest file's event wins however
     * the files are packed into partitions, and within a file the later
-    * record wins. The in-partition id (`monotonically_increasing_id`) is
-    * stamped on the RAW batch, before enrichment or anything else, so any
-    * downstream shuffle merely carries it. Sources without `_metadata`
-    * order by the in-partition id alone, which tracks arrival order only
-    * while one batch is one ordered partition (one shard, one file per
-    * trigger) — as the reference's single Kinesis shard is.
+    * record wins. The in-partition id is `monotonically_increasing_id`'s
+    * encoding, stamped on the RAW batch row before enrichment, so the
+    * shuffle merely carries it. Sources without `_metadata` order by the
+    * in-partition id alone, which tracks arrival order only while one batch
+    * is one ordered partition (one shard, one file per trigger) — as the
+    * reference's single Kinesis shard is.
     *
     * The query's checkpoint commits (the source, offset and commit logs of
     * every micro-batch) go through [[LocalCheckpointFileManager]], unless
@@ -354,54 +361,60 @@ object TributePipeline {
       storeName: String,
       logDir: String,
       checkpointDir: String): StreamingQuery = {
-    lazy val dims = DimensionLookup(tributes, games)
+    val stamped = stampSource(streamingEvents)
+    lazy val payload = FlagshipPayload(DimensionLookup(tributes, games), stamped.schema, stamped.sparkSession)
     LocalCheckpointFileManager.install(streamingEvents.sparkSession)
-    stampSource(streamingEvents).writeStream
+    stamped.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, dims, storeName, logDir)
+        writeBatch(payload, batch, Set.empty, storeName, logDir)
       }
       .start()
   }
 
-  private def processBatch(
+  /** One micro-batch as one job of two stages: the payload of every
+    * admitted event, shuffled by tribute into [[writeBatchPartition]]. The
+    * shuffle is as wide as the session's shuffle partitions, at most one
+    * partition per core. */
+  private def writeBatch(
+      payload: FlagshipPayload,
       batch: DataFrame,
-      dims: DimensionLookup,
+      forgotten: Set[String],
       storeName: String,
       logDir: String): Unit = {
-    val enriched = dims.enrich(batch.withColumn(ArrivalSeqCol, monotonically_increasing_id()))
-    val logged = enriched.drop(ArrivalMTimeCol, ArrivalPathCol, ArrivalSeqCol)
-    val payload = enriched.select(
-      col("tributeid").cast("string").as("__key"),
-      col(ArrivalMTimeCol), col(ArrivalPathCol), col(ArrivalSeqCol),
-      col("streamingeventid").cast("string"),
-      rowJson(logged),
-      struct(Status.stateItemCols: _*))
+    val s = batch.sparkSession
+    val width = math.min(s.sparkContext.defaultParallelism, s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val stateSchema = payload.stateSchema
     Files.createDirectories(Paths.get(logDir))
-    payload.repartition(col("__key")).foreachPartition { rows: Iterator[Row] =>
-      writeBatchPartition(rows, storeName, logDir)
+    payload.rows(batch, forgotten).partitionBy(new HashPartitioner(width)).foreachPartition { rows =>
+      writeBatchPartition(rows, stateSchema, storeName, logDir)
     }
   }
 
   /** The fused sink of one shuffle partition, which holds every event of
     * its tributes: each row's log object, then each tribute's
-    * last-arriving row as its state item. Payload layout: (key, mtime,
-    * path, seq, streamingeventid, full-row JSON, 12-field state struct).
+    * last-arriving row as its state item ([[FlagshipPayload]] gives the
+    * row layout).
     */
-  private def writeBatchPartition(rows: Iterator[Row], storeName: String, logDir: String): Unit = {
-    def arrivedAfter(a: Row, b: Row): Boolean =
+  private def writeBatchPartition(
+      rows: Iterator[(String, InternalRow)],
+      stateSchema: StructType,
+      storeName: String,
+      logDir: String): Unit = {
+    def arrivedAfter(a: InternalRow, b: InternalRow): Boolean =
       if (a.getLong(1) != b.getLong(1)) a.getLong(1) > b.getLong(1)
-      else if (a.getString(2) != b.getString(2)) a.getString(2) > b.getString(2)
+      else if (a.getUTF8String(2) != b.getUTF8String(2)) a.getUTF8String(2).compareTo(b.getUTF8String(2)) > 0
       else a.getLong(3) > b.getLong(3)
-    val latest = new java.util.HashMap[String, Row]()
-    rows.foreach { r =>
-      writeLogObject(logDir, r.getString(4), r.getString(5))
-      val prev = latest.get(r.getString(0))
-      if (prev == null || arrivedAfter(r, prev)) latest.put(r.getString(0), r)
+    val latest = new java.util.HashMap[String, InternalRow]()
+    rows.foreach { case (key, r) =>
+      writeLogObject(logDir, if (r.isNullAt(4)) null else r.getUTF8String(4).toString, r.getUTF8String(5).toString)
+      val prev = latest.get(key)
+      if (prev == null || arrivedAfter(r, prev)) latest.put(key, r)
     }
     val store = KVRegistry.getOrCreate(storeName)
-    latest.values.forEach(r => putStateItem(store, r.getStruct(6)))
+    val toRow = CatalystTypeConverters.createToScalaConverter(stateSchema)
+    latest.values.forEach(r => putStateItem(store, toRow(r.getStruct(6, stateSchema.size)).asInstanceOf[Row]))
   }
 
   /** The forget/tombstone side tables inherit the main store's
@@ -550,12 +563,15 @@ object TributePipeline {
   }
 
   /** [[run]] with the forget filter applied per micro-batch: events of
-    * forgotten tributes are dropped BEFORE enrichment, so neither sink
-    * ever sees them again — including on checkpoint-restart replays
-    * (the forget store is consulted at batch time, not at query wiring
-    * time, so requests registered mid-stream take effect from the next
-    * batch). With an empty forget store the plan is identical to
-    * [[run]]'s.
+    * forgotten tributes are dropped inside the batch's payload pass,
+    * before the shuffle, so neither sink ever sees them again — including
+    * on checkpoint-restart replays (the forget store is consulted at batch
+    * time, not at query wiring time, so requests registered mid-stream
+    * take effect from the next batch). The filter is a lookup of each
+    * event's `tributeid`, cast to a string, in the forgotten set, which is
+    * broadcast once per batch while it is non-empty; an event with a null
+    * `tributeid` drops at the dimension lookup, as in [[run]]. With an
+    * empty forget store the batch runs exactly as in [[run]].
     */
   def runGoverned(
       streamingEvents: DataFrame,
@@ -568,32 +584,17 @@ object TributePipeline {
       // before its writes — the only way to deterministically exercise an
       // erase landing mid-flight (production leaves the default no-op)
       onBatchAdmitted: () => Unit = () => ()): StreamingQuery = {
-    lazy val dims = DimensionLookup(tributes, games)
+    val stamped = stampSource(streamingEvents)
+    lazy val payload = FlagshipPayload(DimensionLookup(tributes, games), stamped.schema, stamped.sparkSession)
     LocalCheckpointFileManager.install(streamingEvents.sparkSession)
-    stampSource(streamingEvents).writeStream
+    stamped.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val forget = KVRegistry.getOrCreate(forgetStoreName(storeName))
-        val forgotten = forget.snapshot().keys.toSeq
+        val forgotten = forget.snapshot().keySet
         onBatchAdmitted()
-        // Small forget sets stay an In-list (codegen'd, no join); a large
-        // victim population would rebuild a huge literal list into every
-        // micro-batch's plan (analysis + codegen cost per batch), so past
-        // the threshold switch to a broadcast anti-join — same semantics,
-        // plan size independent of |forgotten|.
-        val admitted =
-          if (forgotten.isEmpty) batch
-          else if (forgotten.size <= 64) batch.filter(
-            !col("tributeid").cast("string").isin(forgotten: _*))
-          else {
-            import batch.sparkSession.implicits._
-            val ids = forgotten.toDF("__forgotten_id")
-            batch.join(broadcast(ids),
-              batch.col("tributeid").cast("string") === col("__forgotten_id"),
-              "left_anti")
-          }
-        processBatch(admitted, dims, storeName, logDir)
+        writeBatch(payload, batch, forgotten, storeName, logDir)
         // In-flight erase race (round-15 advice): an erase that landed
         // AFTER this batch's admission snapshot was taken saw a log/state
         // point-in-time that this batch's writes may have just re-polluted
@@ -601,7 +602,7 @@ object TributePipeline {
         // those victims NOW, after the batch's writes committed — the
         // scrub is idempotent, so a victim the batch never touched costs
         // one no-op pass, and the erase needs no manual quiesce.
-        val raced = (forget.snapshot().keys.toSet -- forgotten).toSeq.sorted
+        val raced = (forget.snapshot().keySet -- forgotten).toSeq.sorted
         if (raced.nonEmpty) {
           scrubVictims(batch.sparkSession, raced, storeName, logDir)
           ()

@@ -97,19 +97,25 @@ private final class NioCheckpointFileManager(root: Path, conf: Configuration)
 
   /** `LocalFileSystem.rename` refuses an existing destination, so the
     * parent's rename would keep the old file on an overwrite and leave the
-    * temp file behind. The destination's checksum goes first: a reader
-    * then sees the old bytes unchecked or the new bytes, never new bytes
-    * against an old `.crc`. */
+    * temp file behind. On an overwrite the destination's checksum goes
+    * first: a reader then sees the old bytes unchecked or the new bytes,
+    * never new bytes against an old `.crc`. A no-overwrite rename onto a
+    * taken name leaves the existing file and its checksum as they were and
+    * deletes its own temp file before it throws, because Spark's stream
+    * marks itself closed on that throw and its `cancel` then does nothing. */
   override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit = {
     val (from, to) = (local(src), local(dst))
-    Files.deleteIfExists(to.resolveSibling(s".${to.getFileName}.crc"))
-    if (overwriteIfPossible) Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
-    else
+    if (overwriteIfPossible) {
+      Files.deleteIfExists(to.resolveSibling(s".${to.getFileName}.crc"))
+      Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+    } else
       try Files.move(from, to)
       catch {
         case _: java.nio.file.FileAlreadyExistsException =>
+          Files.deleteIfExists(from)
           throw new FileAlreadyExistsException(s"Failed to rename $src to $dst as destination already exists")
       }
+    ()
   }
 
   override def mkdirs(p: Path): Unit = {

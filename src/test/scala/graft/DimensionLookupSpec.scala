@@ -1,16 +1,23 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.functions.{broadcast, col, struct}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test}
 
 import graft.model.Schemas
 import graft.ops.Status
-import graft.pipeline.{DimensionLookup, TributePipeline}
+import graft.pipeline.{DimensionLookup, FlagshipPayload, KVStore, TributePipeline}
 import graft.sources.Sources
 
 /** The streaming pipeline's lookup enrichment against `Status.enrich`,
   * the broadcast-join reference: the same columns in the same order with
-  * the same types, the same rows, and byte-identical event-log JSON. */
+  * the same types, the same rows, and byte-identical event-log JSON; and
+  * the pipeline's compiled micro-batch payload against the same reference,
+  * forget filter included. */
 class DimensionLookupSpec extends SparkSpec {
 
   private val batchOrder = Seq(
@@ -60,9 +67,10 @@ class DimensionLookupSpec extends SparkSpec {
     joined.size.toLong
   }
 
-  test("lookup enrichment equals the broadcast join on the fixtures and the edge rows") {
+  /** Unknown, null and duplicated keys, and null measures. */
+  private lazy val edges: DataFrame = {
     val m = Seq("70", "1", "5.5", "6", "50", "50")
-    val edges = events(Seq(
+    events(Seq(
       event("unknownTribute", "gameId1", "99", m),
       event("unknownGame", "nope", "1", m),
       event("nullTribute", "gameId1", null, m),
@@ -71,6 +79,13 @@ class DimensionLookupSpec extends SparkSpec {
       event("dupGame", "gameId2", "2", m),
       event("dupBoth", "gameId2", "17", m),
       event("nullMeasures", "gameId1", "3", Seq(null, null, null, null, null, null))))
+  }
+
+  /** Every CASE threshold edge of the fixture dimensions, plus nulls. */
+  private val thresholdEdges = Seq[String](null, "0", "0.49", "0.5", "4.5", "5", "5.5", "6",
+    "6.49", "6.5", "7", "95", "95.01", "100", "100.01", "-1")
+
+  test("lookup enrichment equals the broadcast join on the fixtures and the edge rows") {
     // 65 fixture events resolve once each; the edges: 2 + 2 + 4 + 1
     assert(assertSame(fixtureEvents.unionAll(edges)) === 65 + 9)
     // the output carries the event's spelling of the key, as the join's
@@ -90,9 +105,7 @@ class DimensionLookupSpec extends SparkSpec {
   test("property: lookup enrichment equals the broadcast join on generated events") {
     val ids = Gen.oneOf[String](null, "1", "3", "9", "15", "17", "99", "tributeid")
     val gameIds = Gen.oneOf[String](null, "gameId1", "gameId2", "gameid1")
-    // every CASE threshold edge of the fixture dims, plus nulls
-    val measure = Gen.oneOf[String](null, "0", "0.49", "0.5", "4.5", "5", "5.5", "6",
-      "6.49", "6.5", "7", "95", "95.01", "100", "100.01", "-1")
+    val measure = Gen.oneOf(thresholdEdges)
     val eventGen = for {
       t <- ids; g <- gameIds; ms <- Gen.listOfN(6, measure); n <- Gen.choose(0, 1 << 20)
     } yield event(s"gen$n", g, t, ms)
@@ -116,5 +129,73 @@ class DimensionLookupSpec extends SparkSpec {
       DimensionLookup(tributes.drop("tributeId"), games)
     }
     assert(e.getMessage.contains("tributeid"))
+  }
+
+  /** (key, event id, log JSON, state item) of every payload row. */
+  private type Payload = Seq[(String, String, String, Map[String, String])]
+
+  /** The pipeline's compiled micro-batch payload of `ev`, with `forgotten`
+    * tributes filtered as the governed runner filters them. */
+  private def compiled(ev: DataFrame, forgotten: Set[String] = Set.empty): Payload = {
+    val stamped = TributePipeline.stampSource(ev)
+    val payload = FlagshipPayload(lookup, stamped.schema, spark)
+    val toRow = CatalystTypeConverters.createToScalaConverter(payload.schema)
+    val rows = payload.rows(stamped, forgotten).collect()
+    assert(rows.forall { case (key, r) => key == r.getUTF8String(0).toString })
+    rows.toSeq.map { case (_, r) =>
+      val row = toRow(r).asInstanceOf[Row]
+      (row.getString(0), row.getString(4), row.getString(5), KVStore.item(row.getStruct(6)))
+    }.sortBy(p => (p._2, p._3))
+  }
+
+  /** The same payload from the DataFrame path: the broadcast join,
+    * `rowJson` and `Status.stateItemCols`. */
+  private def reference(ev: DataFrame): Payload = {
+    val enriched = Status.enrich(ev, tributes, games)
+    enriched.select(col("tributeid").cast("string"), col("streamingeventid").cast("string"),
+      TributePipeline.rowJson(enriched), struct(Status.stateItemCols: _*))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), KVStore.item(r.getStruct(3))))
+      .sortBy(p => (p._2, p._3))
+  }
+
+  private lazy val parityEvents: DataFrame = {
+    val onEdges = for ((v, i) <- thresholdEdges.zipWithIndex; t <- Seq("1", "3", "17"))
+      yield event(s"edge$i-$t", "gameId1", t, Seq.fill(6)(v))
+    fixtureEvents.unionAll(edges).unionAll(events(onEdges))
+  }
+
+  test("compiled micro-batch payload equals the DataFrame path: rows, log JSON bytes and state items") {
+    val viaDataFrame = reference(parityEvents)
+    // 65 fixtures, 9 edge rows, 16 threshold edges for "1" and "3" and 2 each for "17"
+    assert(viaDataFrame.size === 65 + 9 + 16 * 4)
+    val viaPayload = compiled(parityEvents)
+    assert(viaPayload.map(_._1) === viaDataFrame.map(_._1))
+    assert(viaPayload.map(_._2) === viaDataFrame.map(_._2))
+    assert(viaPayload.map(_._3.getBytes(StandardCharsets.UTF_8).toSeq) ===
+      viaDataFrame.map(_._3.getBytes(StandardCharsets.UTF_8).toSeq))
+    assert(viaPayload.map(_._4) === viaDataFrame.map(_._4))
+    assert(viaPayload.forall(_._4.size === 12))
+  }
+
+  test("the governed filter admits what the in-list filter (10 ids) and the broadcast anti-join (100 ids) admitted") {
+    val victims = Seq("1", "3", "9", "17")
+    for (n <- Seq(10, 100)) {
+      val forgotten = victims ++ (victims.size until n).map(i => s"gone$i")
+      // the filters the governed runner applied before this payload pass:
+      // an In-list up to 64 ids, a broadcast anti-join past that
+      val admitted =
+        if (n <= 64) parityEvents.filter(!col("tributeid").cast("string").isin(forgotten: _*))
+        else {
+          val ids = spark.createDataFrame(java.util.Arrays.asList(forgotten.map(Row(_)): _*),
+            StructType(Seq(StructField("__forgotten_id", StringType))))
+          parityEvents.join(broadcast(ids),
+            parityEvents.col("tributeid").cast("string") === col("__forgotten_id"), "left_anti")
+        }
+      val viaDataFrame = reference(admitted)
+      assert(viaDataFrame.nonEmpty && viaDataFrame.forall(p => !victims.contains(p._1)))
+      assert(viaDataFrame.size < reference(parityEvents).size)
+      assert(compiled(parityEvents, forgotten.toSet) === viaDataFrame, s"$n forgotten ids")
+    }
   }
 }

@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import graft.ops.Status
 import graft.pipeline.TributePipeline
@@ -35,15 +40,28 @@ class FlagshipBatchSpec extends SparkSpec {
   }
 
   test("stream-static joins broadcast the dimension side (no shuffle of events)") {
-    // fresh (uncached) enrichment: the cached variant's plan is an
-    // InMemoryTableScan that hides the join shape
+    // the same plan as the cached `enriched`, so once an earlier test has
+    // cached that, this plan reads the cache: its relation is unwrapped
     val fresh = Status.enrich(allEvents, tributes, games)
-    val planStr = fresh.queryExecution.executedPlan.toString
-    // AQE prints Final + Initial plans; require both joins broadcast in each
-    assert(planStr.split("BroadcastHashJoin").length - 1 >= 2,
-      s"expected 2 broadcast joins, plan:\n$planStr")
-    assert(!planStr.contains("ShuffleExchange") && !planStr.contains("SortMergeJoin"),
-      s"flagship enrichment must be shuffle-free, plan:\n$planStr")
+    val plan = fresh.queryExecution.executedPlan
+    // AQE's current plan, with query stages and cached relations unwrapped
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case n => n +: n.children.flatMap(nodes)
+    }
+    def check(phase: String): Unit = {
+      val all = nodes(plan)
+      assert(all.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 2,
+        s"expected 2 broadcast joins, $phase plan:\n$plan")
+      assert(!all.exists(n => n.isInstanceOf[ShuffleExchangeLike] || n.isInstanceOf[SortMergeJoinExec]),
+        s"flagship enrichment must be shuffle-free, $phase plan:\n$plan")
+    }
+    // both joins broadcast in AQE's initial plan and in its final plan
+    check("initial")
+    fresh.collect()
+    check("final")
   }
 
   test("documented golden cases hold on individual events") {

@@ -80,8 +80,17 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     // HDFSMetadataLog reads this exception type as a concurrent writer
     intercept[FileAlreadyExistsException](write(fm, f, "second", overwrite = false))
     assert(read(fm, f) === "first")
+    assert(names(dir) === Set("0"), "the collision leaves no temp file behind")
     write(fm, f, "second", overwrite = true)
     assert(read(fm, f) === "second")
+
+    // a file the default manager wrote keeps its checksum through a collision
+    val default = new FileContextBasedCheckpointFileManager(new Path(dir.toUri), conf())
+    val g = new Path(dir.resolve("1").toUri)
+    write(default, g, "checksummed", overwrite = false)
+    intercept[FileAlreadyExistsException](write(fm, g, "clobber", overwrite = false))
+    assert(names(dir) === Set("0", "1", ".1.crc"))
+    assert(read(fm, g) === "checksummed" && read(default, g) === "checksummed")
   }
 
   test("an overwrite leaves no stale .crc that fails a read, under either manager") {

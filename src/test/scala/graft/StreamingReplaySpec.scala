@@ -239,11 +239,12 @@ class StreamingReplaySpec extends SparkSpec {
 
   test("micro-batch shape: one action per data batch, dimensions read once per query (typed plan checks)") {
     import java.util.concurrent.ConcurrentLinkedQueue
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.apache.spark.sql.util.QueryExecutionListener
 
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -252,18 +253,23 @@ class StreamingReplaySpec extends SparkSpec {
       case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
     }
     val fence = "graft.test.fence"
-    val jobs = new ConcurrentLinkedQueue[(String, Long)]() // (query id, batch id)
+    val jobs = new ConcurrentLinkedQueue[(String, Long, String)]() // (query id, batch id, SQL execution id)
     val fences = new java.util.concurrent.atomic.AtomicInteger(0)
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val executions = new ConcurrentLinkedQueue[String]() // SQL execution ids, as they start
     val jobListener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val p = j.properties
         if (p != null && p.getProperty(fence) != null) { fences.incrementAndGet(); () }
         else if (p != null && p.getProperty("sql.streaming.queryId") != null) {
           jobs.add((p.getProperty("sql.streaming.queryId"),
-            p.getProperty("streaming.sql.batchId").toLong))
+            p.getProperty("streaming.sql.batchId").toLong, p.getProperty("spark.sql.execution.id")))
           ()
         }
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.add(s.executionId.toString); ()
+        case _ =>
       }
     }
     val planListener = new QueryExecutionListener {
@@ -274,14 +280,15 @@ class StreamingReplaySpec extends SparkSpec {
     }
     // the listener bus is FIFO: once a fence job's start is seen, every
     // job and SQL execution before it has been delivered
-    def drainedPlans(): Seq[SparkPlan] = {
+    def drained(): (Seq[SparkPlan], Seq[String]) = {
       val seen = fences.get()
       spark.sparkContext.setLocalProperty(fence, "1")
       try spark.sparkContext.parallelize(1 to 1, 1).count()
       finally spark.sparkContext.setLocalProperty(fence, null)
       val deadline = System.currentTimeMillis() + 30000
       while (fences.get() == seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      Iterator.continually(plans.poll()).takeWhile(_ != null).toSeq
+      (Iterator.continually(plans.poll()).takeWhile(_ != null).toSeq,
+        Iterator.continually(executions.poll()).takeWhile(_ != null).toSeq)
     }
 
     val base = Files.createTempDirectory("graft-shape")
@@ -294,28 +301,33 @@ class StreamingReplaySpec extends SparkSpec {
       base.resolve("checkpoint").toString)
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
-    val perBatch = try {
-      drainedPlans()
+    val (perBatch, executionsPerBatch) = try {
+      drained()
       val t0 = System.currentTimeMillis() - 60000
       batchOrder.take(4).zipWithIndex.map { case (n, i) =>
         val dst = streamDir.resolve(s"$n.json")
         Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst)
         dst.toFile.setLastModified(t0 + i * 1000)
         q.processAllAvailable()
-        drainedPlans()
-      }
+        drained()
+      }.unzip
     } finally {
       q.stop()
       spark.listenerManager.unregister(planListener)
       spark.sparkContext.removeSparkListener(jobListener)
     }
 
-    val byBatch = jobs.asScala.filter(_._1 == q.id.toString).groupBy(_._2)
-      .map { case (b, js) => b -> js.size }
+    val byBatch = jobs.asScala.filter(_._1 == q.id.toString).toSeq.groupBy(_._2)
     assert(byBatch.keySet === Set(0L, 1L, 2L, 3L), s"jobs by batch: $byBatch")
-    // the first data batch reads the two dimensions, one job each
-    assert(byBatch(0L) <= 4, s"jobs by batch: $byBatch")
-    assert((1L to 3L).forall(b => byBatch(b) <= 2), s"jobs by batch: $byBatch")
+    // the first data batch also reads the two dimensions, one job each
+    assert(byBatch(0L).size <= 3, s"jobs by batch: $byBatch")
+    (1 to 3).foreach { b =>
+      assert(byBatch(b.toLong).size === 1, s"jobs by batch: $byBatch")
+      // the batch's job runs under the engine's own SQL execution of the
+      // batch, and the batch starts no SQL execution of its own
+      assert(executionsPerBatch(b) === byBatch(b.toLong).map(_._3),
+        s"batch $b: SQL executions ${executionsPerBatch(b)}, jobs ${byBatch(b.toLong)}")
+    }
 
     val scans = perBatch.map(_.flatMap(nodes).count(_.isInstanceOf[InMemoryTableScanExec]))
     assert(scans === Seq(2, 0, 0, 0),
