@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
 
 import graft.ops.Status
 import graft.pipeline.TributePipeline
@@ -42,7 +43,14 @@ object Main {
       val known = replayOrder.flatMap(n => all.find(_.endsWith(s"/$n.json")))
       known ++ (all.toSet -- known.toSet).toSeq.sorted
     }
-    val events = files.map(Sources.eventBatch(spark, _)).reduce(_ unionAll _)
+    // arrival order, stamped per file before the union: the file's ordinal
+    // in the replay order, then the event's index in its file. A multi-line
+    // JSON file is read as one partition, so on a one-file frame
+    // `monotonically_increasing_id` is the in-file index (< 2^33).
+    val events = files.zipWithIndex.map { case (f, i) =>
+      Sources.eventBatch(spark, f).withColumn(TributePipeline.ArrivalSeqCol,
+        lit(i.toLong << 33) + monotonically_increasing_id())
+    }.reduce(_ unionAll _)
     val tributes = Sources.tributeDim(spark, tributeCsv)
     val games = Sources.gameDim(spark, gameJson)
 
@@ -54,7 +62,7 @@ object Main {
     val enriched = Status.enrich(events, tributes, games)
     enriched.printSchema()
     println(s"events enriched: ${enriched.count()}")
-    val state = TributePipeline.latestStatePerTribute(enriched)
+    val state = TributePipeline.latestStatePerTribute(enriched, col(TributePipeline.ArrivalSeqCol))
       .orderBy("tributeId")
     state.show(100, truncate = false)
     spark.stop()

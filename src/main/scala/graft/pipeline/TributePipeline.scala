@@ -7,13 +7,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{Column, DataFrame, ForeachWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, MapType, StringType, StructType}
 
@@ -38,8 +35,7 @@ trait KVStore extends Serializable {
 
 object KVStore {
   /** A row as a store item: each field by name, its external value
-    * stringified, nulls kept null. The one Row → item conversion of every
-    * state-write path, so they all store the same rendering. */
+    * stringified, nulls kept null. */
   def item(row: Row): Map[String, String] =
     row.schema.fieldNames.zipWithIndex
       .map { case (n, i) => n -> (if (row.isNullAt(i)) null else row.get(i).toString) }
@@ -184,27 +180,20 @@ private[pipeline] final class SerializableHadoopConf(
 }
 
 /** The flagship continuous pipeline: stream-static enrich + two sinks
-  * (reference: script/TributeStreamingJob.py:101-146).
-  *
-  * Two sink variants:
-  *   - `run` (default): `foreachBatch`, one Spark job per micro-batch,
-  *     planned once per query. On its first data batch the two dimensions
-  *     are read and broadcast as key → rows maps ([[DimensionLookup]]) and
-  *     the batch payload is planned ([[FlagshipPayload]]); each batch is
-  *     then enriched against the maps partition by partition, with no join,
-  *     no per-batch broadcast and no per-batch Catalyst planning. One fused
-  *     pass then shuffles the batch by tribute, writes every event's log
-  *     object, and puts each tribute's last-arriving event as its state
-  *     item — the batch-level last-writer-wins dedup that replaces the
-  *     reference's one external put per row (its 5-WCU DynamoDB table was
-  *     its de-facto output bottleneck). The arrival order LWW follows is
-  *     explicit, see [[run]].
-  *   - `runForeach`: per-row `ForeachWriter[Row]` parity sink — the direct
-  *     mapping of the reference's `writeStream.foreach(write_data)`
-  *     (script/TributeStreamingJob.py:78-82,139-144): one KV put + one log
-  *     write per row, in record order per partition. Same converged state
-  *     for single-partition batches (the reference's regime: one Kinesis
-  *     shard); the foreachBatch path is the scale-correct default.
+  * (reference: script/TributeStreamingJob.py:101-146), run by one runner,
+  * [[run]]: `foreachBatch`, one Spark job per micro-batch, planned once per
+  * query. On its first data batch the two dimensions are read and
+  * broadcast as key → rows maps ([[DimensionLookup]]) and the batch payload
+  * is planned ([[FlagshipPayload]]); each batch is then enriched against
+  * the maps partition by partition, with no join, no per-batch broadcast
+  * of the dimensions and no per-batch Catalyst planning. One fused pass
+  * then shuffles the batch by tribute, writes every event's log object,
+  * and puts each tribute's last-arriving event as its state item — the
+  * batch-level last-writer-wins dedup that replaces the reference's one
+  * external put per row (its 5-WCU DynamoDB table was its de-facto output
+  * bottleneck). The arrival order LWW follows is explicit, and every batch
+  * is admitted against the standing forget store of [[forgetTributes]];
+  * see [[run]].
   *
   * At-least-once delivery from checkpointing + idempotent keyed upsert +
   * idempotent path-keyed log writes ⇒ converged output is effectively
@@ -212,21 +201,14 @@ private[pipeline] final class SerializableHadoopConf(
   */
 object TributePipeline {
 
-  /** Name of the arrival-sequence column stamped by the streaming runners. */
+  /** Name of the arrival-sequence column, stamped on each event by [[run]]
+    * (and by `graft.Main` on its batch replay). */
   val ArrivalSeqCol = "__arrival_seq"
 
-  // the source side of the streaming runners' arrival order, stamped at
+  // the source side of the streaming runner's arrival order, stamped at
   // wiring time: a file's modification time (µs) and path
   private[pipeline] val ArrivalMTimeCol = "__arrival_mtime"
   private[pipeline] val ArrivalPathCol = "__arrival_path"
-
-  private def hasShuffle(plan: SparkPlan): Boolean = {
-    val searchRoot = plan match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
-    }
-    searchRoot.collectFirst { case _: ShuffleExchangeLike => () }.isDefined
-  }
 
   /** Enriched rows → 12-field state items, one per tribute: the event with
     * the highest `arrivalSeq` per tribute wins (reference semantics: last
@@ -242,34 +224,6 @@ object TributePipeline {
       .filter(col("__rn") === 1)
       .drop("__rn")
     Status.stateItem(latest)
-  }
-
-  /** Convenience overload deriving arrival order from physical layout
-    * (`monotonically_increasing_id()`): valid ONLY while the input plan is
-    * shuffle-free, because the id encodes (partition ordinal, row index) and
-    * tracks record arrival order only when partition ordinals track
-    * file/record order. Guarded: refuses a plan containing a shuffle
-    * exchange rather than silently picking an arbitrary "winner" — callers
-    * with a shuffled input must supply an explicit `arrivalSeq`. (The guard
-    * inspects the physical plan; a cached input hides its upstream plan and
-    * is accepted — cache preserves the partition order it captured.)
-    */
-  def latestStatePerTribute(enriched: DataFrame): DataFrame = {
-    // forcing executedPlan on a streaming frame throws an unrelated
-    // "must be executed with writeStream.start()" AnalysisException from
-    // inside this guard — reject streaming inputs with the actionable
-    // message first (streaming callers use streaming/StreamingOps.lwwState)
-    require(!enriched.isStreaming,
-      "latestStatePerTribute(df) inspects the batch physical plan and cannot " +
-        "accept a streaming DataFrame; use StreamingOps.latestStatePerUser / " +
-        "foreachBatch upsert for streams, or pass an explicit arrivalSeq column")
-    require(!hasShuffle(enriched.queryExecution.executedPlan),
-      "latestStatePerTribute(df) derives arrival order from physical layout, " +
-        "which a shuffle upstream destroys; pass an explicit arrivalSeq column " +
-        "captured at the source (latestStatePerTribute(df, arrivalSeq))")
-    latestStatePerTribute(
-      enriched.withColumn(ArrivalSeqCol, monotonically_increasing_id()),
-      col(ArrivalSeqCol))
   }
 
   /** JSON-serialize a full row with the reference's decimal parity: the
@@ -297,13 +251,6 @@ object TributePipeline {
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
       StandardOpenOption.WRITE)
     ()
-  }
-
-  /** Puts one state item, given as its 12-field struct, under its
-    * tributeId. */
-  private def putStateItem(store: KVStore, st: Row): Unit = {
-    val item = KVStore.item(st)
-    store.put(item("tributeId"), item)
   }
 
   /** Stamps the source side of the arrival order on the streaming frame.
@@ -347,12 +294,24 @@ object TributePipeline {
     * is one ordered partition (one shard, one file per trigger) — as the
     * reference's single Kinesis shard is.
     *
+    * Each batch is admitted against a snapshot of the forget store of
+    * [[forgetTributes]], taken at batch start: events of forgotten tributes
+    * are dropped inside the payload pass, before the shuffle, so neither
+    * sink ever sees them again — including on checkpoint-restart replays
+    * (the store is consulted at batch time, not at wiring time, so requests
+    * registered mid-stream take effect from the next batch). The filter is
+    * a lookup of each event's `tributeid`, cast to a string, in the
+    * forgotten set, which is broadcast once per batch while it is
+    * non-empty; an event with a null `tributeid` drops at the dimension
+    * lookup. After the batch's writes, victims registered since its
+    * snapshot are re-scrubbed ([[scrubVictims]]), so an erase racing an
+    * in-flight batch converges without stopping the query.
+    *
     * The query's checkpoint commits (the source, offset and commit logs of
     * every micro-batch) go through [[LocalCheckpointFileManager]], unless
     * the session names its own manager: on a local (`file:`) checkpoint
     * they start no process, and any other scheme commits through Spark's
-    * default manager, unchanged. [[runGoverned]] and [[runForeach]] do the
-    * same.
+    * default manager, unchanged.
     */
   def run(
       streamingEvents: DataFrame,
@@ -360,7 +319,11 @@ object TributePipeline {
       games: DataFrame,
       storeName: String,
       logDir: String,
-      checkpointDir: String): StreamingQuery = {
+      checkpointDir: String,
+      // test seam: runs after the batch's admission snapshot is taken and
+      // before its writes — the only way to deterministically exercise an
+      // erase landing mid-flight (production leaves the default no-op)
+      onBatchAdmitted: () => Unit = () => ()): StreamingQuery = {
     val stamped = stampSource(streamingEvents)
     lazy val payload = FlagshipPayload(DimensionLookup(tributes, games), stamped.schema, stamped.sparkSession)
     LocalCheckpointFileManager.install(streamingEvents.sparkSession)
@@ -368,7 +331,19 @@ object TributePipeline {
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeBatch(payload, batch, Set.empty, storeName, logDir)
+        val forget = KVRegistry.getOrCreate(forgetStoreName(storeName))
+        val forgotten = forget.snapshot().keySet
+        onBatchAdmitted()
+        writeBatch(payload, batch, forgotten, storeName, logDir)
+        // an erase that landed after this batch's admission snapshot saw a
+        // log and state that this batch's writes may have just re-polluted:
+        // re-scrub those victims now (idempotent, so a victim the batch
+        // never touched costs one no-op pass)
+        val raced = (forget.snapshot().keySet -- forgotten).toSeq.sorted
+        if (raced.nonEmpty) {
+          scrubVictims(batch.sparkSession, raced, storeName, logDir)
+          ()
+        }
       }
       .start()
   }
@@ -414,7 +389,10 @@ object TributePipeline {
     }
     val store = KVRegistry.getOrCreate(storeName)
     val toRow = CatalystTypeConverters.createToScalaConverter(stateSchema)
-    latest.values.forEach(r => putStateItem(store, toRow(r.getStruct(6, stateSchema.size)).asInstanceOf[Row]))
+    latest.values.forEach { r =>
+      val item = KVStore.item(toRow(r.getStruct(6, stateSchema.size)).asInstanceOf[Row])
+      store.put(item("tributeId"), item)
+    }
   }
 
   /** The forget/tombstone side tables inherit the main store's
@@ -442,7 +420,7 @@ object TributePipeline {
     * outlives the erase. So the op does all three:
     *
     *  1. registers the victims in a standing forget store (consulted by
-    *     [[runGoverned]] on every micro-batch — including batches
+    *     [[run]] on every micro-batch — including batches
     *     replayed after a checkpoint restart, which is what makes the
     *     erase RESTART-SAFE: an at-least-once replay of the victim's
     *     events is admitted by the filter exactly never);
@@ -464,10 +442,10 @@ object TributePipeline {
     * victims' rows leave the scan filter.
     *
     * In-flight batches need no quiesce: the scrub reads the log at a
-    * point in time, and [[runGoverned]] reads the forget snapshot at
+    * point in time, and [[run]] reads the forget snapshot at
     * micro-batch START — a batch already in flight when the erase runs
     * was admitted under the PRE-erase snapshot and may re-append victim
-    * events after the scrub. [[runGoverned]] closes that race itself:
+    * events after the scrub. [[run]] closes that race itself:
     * after each batch commits it diffs the forget store against the
     * batch's admission snapshot and re-runs the (idempotent)
     * [[scrubVictims]] core for any victim registered mid-flight, so the
@@ -502,7 +480,7 @@ object TributePipeline {
   }
 
   /** The state-evict + log-scrub core shared by [[forgetTributes]] and
-    * [[runGoverned]]'s post-batch residual re-scrub: evict the victims'
+    * [[run]]'s post-batch residual re-scrub: evict the victims'
     * keys from the KV state table, then physically delete their event-log
     * objects. Returns (log files deleted, residual log files after the
     * scrub) per victim. Idempotent — a re-run deletes nothing and reports
@@ -560,102 +538,5 @@ object TributePipeline {
       }
     }
     (victimLogCounts(delete = true), victimLogCounts(delete = false))
-  }
-
-  /** [[run]] with the forget filter applied per micro-batch: events of
-    * forgotten tributes are dropped inside the batch's payload pass,
-    * before the shuffle, so neither sink ever sees them again — including
-    * on checkpoint-restart replays (the forget store is consulted at batch
-    * time, not at query wiring time, so requests registered mid-stream
-    * take effect from the next batch). The filter is a lookup of each
-    * event's `tributeid`, cast to a string, in the forgotten set, which is
-    * broadcast once per batch while it is non-empty; an event with a null
-    * `tributeid` drops at the dimension lookup, as in [[run]]. With an
-    * empty forget store the batch runs exactly as in [[run]].
-    */
-  def runGoverned(
-      streamingEvents: DataFrame,
-      tributes: DataFrame,
-      games: DataFrame,
-      storeName: String,
-      logDir: String,
-      checkpointDir: String,
-      // test seam: runs after the batch's admission snapshot is taken and
-      // before its writes — the only way to deterministically exercise an
-      // erase landing mid-flight (production leaves the default no-op)
-      onBatchAdmitted: () => Unit = () => ()): StreamingQuery = {
-    val stamped = stampSource(streamingEvents)
-    lazy val payload = FlagshipPayload(DimensionLookup(tributes, games), stamped.schema, stamped.sparkSession)
-    LocalCheckpointFileManager.install(streamingEvents.sparkSession)
-    stamped.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val forget = KVRegistry.getOrCreate(forgetStoreName(storeName))
-        val forgotten = forget.snapshot().keySet
-        onBatchAdmitted()
-        writeBatch(payload, batch, forgotten, storeName, logDir)
-        // In-flight erase race (round-15 advice): an erase that landed
-        // AFTER this batch's admission snapshot was taken saw a log/state
-        // point-in-time that this batch's writes may have just re-polluted
-        // (the batch was admitted under the pre-erase snapshot). Re-scrub
-        // those victims NOW, after the batch's writes committed — the
-        // scrub is idempotent, so a victim the batch never touched costs
-        // one no-op pass, and the erase needs no manual quiesce.
-        val raced = (forget.snapshot().keySet -- forgotten).toSeq.sorted
-        if (raced.nonEmpty) {
-          scrubVictims(batch.sparkSession, raced, storeName, logDir)
-          ()
-        }
-      }
-      .start()
-  }
-
-  /** Per-row parity writer: one KV put + one event-log file per processed
-    * row, the direct mapping of the reference's `write_data` callback
-    * (reference: script/TributeStreamingJob.py:78-82 — put_item at :49-66,
-    * S3 put at :70-74). Row layout: (streamingeventid, full-row JSON,
-    * 12-field state struct).
-    */
-  private final class TributeForeachWriter(storeName: String, logDir: String)
-    extends ForeachWriter[Row] {
-    @transient private var store: KVStore = _
-    override def open(partitionId: Long, epochId: Long): Boolean = {
-      store = KVRegistry.getOrCreate(storeName)
-      Files.createDirectories(Paths.get(logDir))
-      true
-    }
-    override def process(r: Row): Unit = {
-      writeLogObject(logDir, r.getString(0), r.getString(1))
-      putStateItem(store, r.getStruct(2))
-    }
-    override def close(errorOrNull: Throwable): Unit = ()
-  }
-
-  /** The reference's exact sink shape: `writeStream.foreach(writer)`, row at
-    * a time (SURVEY §2 #19's first mapping). Last-writer-wins emerges from
-    * put order, as in the reference: rows are processed in record order per
-    * partition, so with single-partition micro-batches (the reference's
-    * 1-shard regime, and the fixture replay) the converged state is
-    * identical to the batch path. Prefer `run` at scale.
-    */
-  def runForeach(
-      streamingEvents: DataFrame,
-      tributes: DataFrame,
-      games: DataFrame,
-      storeName: String,
-      logDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val enriched = Status.enrich(streamingEvents, tributes, games)
-    val payload = enriched.select(
-      col("streamingeventid").cast("string"),
-      rowJson(enriched),
-      struct(Status.stateItemCols: _*))
-    LocalCheckpointFileManager.install(streamingEvents.sparkSession)
-    payload.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreach(new TributeForeachWriter(storeName, logDir))
-      .start()
   }
 }

@@ -198,4 +198,24 @@ class DimensionLookupSpec extends SparkSpec {
       assert(compiled(parityEvents, forgotten.toSet) === viaDataFrame, s"$n forgotten ids")
     }
   }
+
+  test("state items store each value's EXTERNAL rendering, not its Catalyst internals") {
+    import spark.implicits._
+    val df = Seq(("k1", java.sql.Timestamp.valueOf("2026-01-01 00:00:00"),
+        java.sql.Date.valueOf("2026-01-02"), BigDecimal("12.50"), 7L))
+      .toDF("tributeId", "seen_at", "day", "score", "n")
+      .withColumn("score", col("score").cast("decimal(9,2)"))
+    // the conversion the pipeline's sink applies to each state item
+    val schema = df.schema
+    val Array(item) = df.queryExecution.toRdd.mapPartitions { rows =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      rows.map(r => KVStore.item(toRow(r).asInstanceOf[Row]))
+    }.collect()
+    // a timestamp must NOT surface as its internal micros long, nor the
+    // date as a day count
+    assert(item("seen_at") === "2026-01-01 00:00:00.0")
+    assert(item("day") === "2026-01-02")
+    assert(item("score") === "12.50")
+    assert(item("n") === "7")
+  }
 }

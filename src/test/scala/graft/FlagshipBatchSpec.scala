@@ -25,12 +25,22 @@ class FlagshipBatchSpec extends SparkSpec {
   private lazy val tributes = Sources.tributeDim(spark, fixture("staticData/tributeData.csv"))
   private lazy val games = Sources.gameDim(spark, fixture("staticData/gameData.json"))
 
-  /** Union in replay order: one file per part keeps arrival order encoded in
-    * partition ordinals, which latestStatePerTribute's sequence relies on.
-    */
+  /** The 9 batches, unioned in replay order. */
   private lazy val allEvents: DataFrame =
     batchOrder.map(b => Sources.eventBatch(spark, fixture(s"streamingData/$b.json")))
       .reduce(_ unionAll _)
+
+  /** The same events with a data-derived arrival sequence: (batch ordinal
+    * in the documented send order) * 1e6 + numeric suffix of
+    * streamingeventid — survives any physical re-layout because it is
+    * computed from row values. */
+  private lazy val stamped: DataFrame =
+    batchOrder.zipWithIndex.map { case (b, i) =>
+      Sources.eventBatch(spark, fixture(s"streamingData/$b.json"))
+        .withColumn("__seq",
+          lit(i.toLong * 1000000L) +
+            regexp_extract(col("streamingeventid"), "Event(\\d+)$", 1).cast("long"))
+    }.reduce(_ unionAll _)
 
   private lazy val enriched = Status.enrich(allEvents, tributes, games).cache()
 
@@ -85,7 +95,8 @@ class FlagshipBatchSpec extends SparkSpec {
 
   test("final state table: one row per tribute seen, last write wins") {
     import spark.implicits._
-    val state = TributePipeline.latestStatePerTribute(enriched).cache()
+    val state = TributePipeline.latestStatePerTribute(
+      Status.enrich(stamped, tributes, games), col("__seq")).cache()
     val rows = state.collect().map(r => r.getAs[String]("tributeId") -> r).toMap
 
     // theEnd.json is the last batch: Cato (3) dies, Peeta (8) + Katniss (9) alive
@@ -102,15 +113,6 @@ class FlagshipBatchSpec extends SparkSpec {
   }
 
   test("explicit arrival order: LWW converges even after arbitrary repartitioning") {
-    // data-derived arrival sequence: (batch ordinal in the documented send
-    // order) * 1e6 + numeric suffix of streamingeventid — survives any
-    // physical re-layout because it is computed from row values
-    val stamped = batchOrder.zipWithIndex.map { case (b, i) =>
-      Sources.eventBatch(spark, fixture(s"streamingData/$b.json"))
-        .withColumn("__seq",
-          lit(i.toLong * 1000000L) +
-            regexp_extract(col("streamingeventid"), "Event(\\d+)$", 1).cast("long"))
-    }.reduce(_ unionAll _)
     val shuffled = Status.enrich(stamped, tributes, games).repartition(17)
     val state = TributePipeline.latestStatePerTribute(shuffled, col("__seq"))
     val rows = state.collect().map(r => r.getAs[String]("tributeId") -> r).toMap
@@ -120,28 +122,5 @@ class FlagshipBatchSpec extends SparkSpec {
     assert(rows("9").getAs[String]("status") === "ALIVE")
     assert(rows("9").getAs[String]("locationStatus") === "IN BOUNDS")
     assert(rows.values.count(_.getAs[String]("status") == "ALIVE") === 2)
-  }
-
-  test("layout-derived overload refuses a shuffled input instead of guessing") {
-    val shuffled = Status.enrich(allEvents, tributes, games).repartition(17)
-    val e = intercept[IllegalArgumentException] {
-      TributePipeline.latestStatePerTribute(shuffled)
-    }
-    assert(e.getMessage.contains("arrivalSeq"))
-  }
-
-  test("layout-derived overload rejects a streaming input with an actionable message") {
-    // forcing executedPlan on a streaming frame would otherwise surface as
-    // an unrelated "must be executed with writeStream.start()" error from
-    // inside the shuffle guard itself
-    val dir = java.nio.file.Files.createTempDirectory("lww-stream").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(fixture("streamingData/preCornucopia.json")),
-      java.nio.file.Paths.get(dir, "preCornucopia.json"))
-    val streaming = Status.enrich(Sources.eventStream(spark, dir), tributes, games)
-    val e = intercept[IllegalArgumentException] {
-      TributePipeline.latestStatePerTribute(streaming)
-    }
-    assert(e.getMessage.contains("StreamingOps"))
   }
 }

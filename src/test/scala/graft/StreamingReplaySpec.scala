@@ -237,140 +237,121 @@ class StreamingReplaySpec extends SparkSpec {
       assert(batches.map(_.numInputRows).sum === 65)
     }
 
-  test("micro-batch shape: one action per data batch, dimensions read once per query (typed plan checks)") {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    import org.apache.spark.sql.util.QueryExecutionListener
+  // with a tribute forgotten before the query starts, each batch also
+  // broadcasts the forgotten set, which must add no job
+  for (victim <- Seq(None, Some("3"))) {
+    test("micro-batch shape: one action per data batch, dimensions read once per query (typed plan checks)" +
+        victim.fold("")(v => s", with tribute $v forgotten before the query starts")) {
+      import java.util.concurrent.ConcurrentLinkedQueue
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+      import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+      import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+      import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+      import org.apache.spark.sql.util.QueryExecutionListener
 
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => s +: nodes(s.plan)
-      case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
-    }
-    val fence = "graft.test.fence"
-    val jobs = new ConcurrentLinkedQueue[(String, Long, String)]() // (query id, batch id, SQL execution id)
-    val fences = new java.util.concurrent.atomic.AtomicInteger(0)
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val executions = new ConcurrentLinkedQueue[String]() // SQL execution ids, as they start
-    val jobListener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val p = j.properties
-        if (p != null && p.getProperty(fence) != null) { fences.incrementAndGet(); () }
-        else if (p != null && p.getProperty("sql.streaming.queryId") != null) {
-          jobs.add((p.getProperty("sql.streaming.queryId"),
-            p.getProperty("streaming.sql.batchId").toLong, p.getProperty("spark.sql.execution.id")))
-          ()
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case s: QueryStageExec => s +: nodes(s.plan)
+        case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
+      }
+      val fence = "graft.test.fence"
+      val jobs = new ConcurrentLinkedQueue[(String, Long, String)]() // (query id, batch id, SQL execution id)
+      val fences = new java.util.concurrent.atomic.AtomicInteger(0)
+      val plans = new ConcurrentLinkedQueue[SparkPlan]()
+      val executions = new ConcurrentLinkedQueue[String]() // SQL execution ids, as they start
+      val jobListener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = {
+          val p = j.properties
+          if (p != null && p.getProperty(fence) != null) { fences.incrementAndGet(); () }
+          else if (p != null && p.getProperty("sql.streaming.queryId") != null) {
+            jobs.add((p.getProperty("sql.streaming.queryId"),
+              p.getProperty("streaming.sql.batchId").toLong, p.getProperty("spark.sql.execution.id")))
+            ()
+          }
+        }
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => executions.add(s.executionId.toString); ()
+          case _ =>
         }
       }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => executions.add(s.executionId.toString); ()
-        case _ =>
+      val planListener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+          plans.add(qe.executedPlan); ()
+        }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
-    }
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        plans.add(qe.executedPlan); ()
+      // the listener bus is FIFO: once a fence job's start is seen, every
+      // job and SQL execution before it has been delivered
+      def drained(): (Seq[SparkPlan], Seq[String]) = {
+        val seen = fences.get()
+        spark.sparkContext.setLocalProperty(fence, "1")
+        try spark.sparkContext.parallelize(1 to 1, 1).count()
+        finally spark.sparkContext.setLocalProperty(fence, null)
+        val deadline = System.currentTimeMillis() + 30000
+        while (fences.get() == seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        (Iterator.continually(plans.poll()).takeWhile(_ != null).toSeq,
+          Iterator.continually(executions.poll()).takeWhile(_ != null).toSeq)
       }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // the listener bus is FIFO: once a fence job's start is seen, every
-    // job and SQL execution before it has been delivered
-    def drained(): (Seq[SparkPlan], Seq[String]) = {
-      val seen = fences.get()
-      spark.sparkContext.setLocalProperty(fence, "1")
-      try spark.sparkContext.parallelize(1 to 1, 1).count()
-      finally spark.sparkContext.setLocalProperty(fence, null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (fences.get() == seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      (Iterator.continually(plans.poll()).takeWhile(_ != null).toSeq,
-        Iterator.continually(executions.poll()).takeWhile(_ != null).toSeq)
-    }
 
-    val base = Files.createTempDirectory("graft-shape")
-    val streamDir = Files.createDirectory(base.resolve("stream"))
-    val q = TributePipeline.run(
-      Sources.eventStream(spark, streamDir.toString),
-      Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
-      Sources.gameDim(spark, fixture("staticData/gameData.json")),
-      s"shape-${System.nanoTime()}", base.resolve("eventlog").toString,
-      base.resolve("checkpoint").toString)
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    val (perBatch, executionsPerBatch) = try {
-      drained()
-      val t0 = System.currentTimeMillis() - 60000
-      batchOrder.take(4).zipWithIndex.map { case (n, i) =>
-        val dst = streamDir.resolve(s"$n.json")
-        Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst)
-        dst.toFile.setLastModified(t0 + i * 1000)
-        q.processAllAvailable()
+      val base = Files.createTempDirectory("graft-shape")
+      val streamDir = Files.createDirectory(base.resolve("stream"))
+      val storeName = s"shape-${System.nanoTime()}"
+      val logDir = base.resolve("eventlog").toString
+      victim.foreach(v => TributePipeline.forgetTributes(spark, Seq(v), storeName, logDir))
+      val q = TributePipeline.run(
+        Sources.eventStream(spark, streamDir.toString),
+        Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
+        Sources.gameDim(spark, fixture("staticData/gameData.json")),
+        storeName, logDir, base.resolve("checkpoint").toString)
+      spark.sparkContext.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      val (perBatch, executionsPerBatch) = try {
         drained()
-      }.unzip
-    } finally {
-      q.stop()
-      spark.listenerManager.unregister(planListener)
-      spark.sparkContext.removeSparkListener(jobListener)
+        val t0 = System.currentTimeMillis() - 60000
+        batchOrder.take(4).zipWithIndex.map { case (n, i) =>
+          val dst = streamDir.resolve(s"$n.json")
+          Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst)
+          dst.toFile.setLastModified(t0 + i * 1000)
+          q.processAllAvailable()
+          drained()
+        }.unzip
+      } finally {
+        q.stop()
+        spark.listenerManager.unregister(planListener)
+        spark.sparkContext.removeSparkListener(jobListener)
+      }
+
+      val byBatch = jobs.asScala.filter(_._1 == q.id.toString).toSeq.groupBy(_._2)
+      assert(byBatch.keySet === Set(0L, 1L, 2L, 3L), s"jobs by batch: $byBatch")
+      // the first data batch also reads the two dimensions, one job each
+      assert(byBatch(0L).size <= 3, s"jobs by batch: $byBatch")
+      (1 to 3).foreach { b =>
+        assert(byBatch(b.toLong).size === 1, s"jobs by batch: $byBatch")
+        // the batch's job runs under the engine's own SQL execution of the
+        // batch, and the batch starts no SQL execution of its own
+        assert(executionsPerBatch(b) === byBatch(b.toLong).map(_._3),
+          s"batch $b: SQL executions ${executionsPerBatch(b)}, jobs ${byBatch(b.toLong)}")
+      }
+
+      val scans = perBatch.map(_.flatMap(nodes).count(_.isInstanceOf[InMemoryTableScanExec]))
+      assert(scans === Seq(2, 0, 0, 0),
+        s"each dimension is read once, on the first data batch: $scans")
+      perBatch.zipWithIndex.foreach { case (ps, b) =>
+        val all = ps.flatMap(nodes)
+        assert(!all.exists(_.isInstanceOf[BroadcastExchangeLike]),
+          s"batch $b rebroadcast a dimension:\n${ps.mkString("\n")}")
+        assert(!all.exists(_.isInstanceOf[CollectLimitExec]),
+          s"batch $b probed for emptiness:\n${ps.mkString("\n")}")
+      }
+      victim.foreach { v =>
+        val state = KVRegistry.getOrCreate(storeName).snapshot()
+        assert(state.nonEmpty && !state.contains(v), s"the forgotten tribute reached the state: ${state.keys}")
+        assert(spark.read.json(logDir).filter(org.apache.spark.sql.functions.col("tributeid") === v)
+          .count() === 0, "the forgotten tribute reached the event log")
+      }
     }
-
-    val byBatch = jobs.asScala.filter(_._1 == q.id.toString).toSeq.groupBy(_._2)
-    assert(byBatch.keySet === Set(0L, 1L, 2L, 3L), s"jobs by batch: $byBatch")
-    // the first data batch also reads the two dimensions, one job each
-    assert(byBatch(0L).size <= 3, s"jobs by batch: $byBatch")
-    (1 to 3).foreach { b =>
-      assert(byBatch(b.toLong).size === 1, s"jobs by batch: $byBatch")
-      // the batch's job runs under the engine's own SQL execution of the
-      // batch, and the batch starts no SQL execution of its own
-      assert(executionsPerBatch(b) === byBatch(b.toLong).map(_._3),
-        s"batch $b: SQL executions ${executionsPerBatch(b)}, jobs ${byBatch(b.toLong)}")
-    }
-
-    val scans = perBatch.map(_.flatMap(nodes).count(_.isInstanceOf[InMemoryTableScanExec]))
-    assert(scans === Seq(2, 0, 0, 0),
-      s"each dimension is read once, on the first data batch: $scans")
-    perBatch.zipWithIndex.foreach { case (ps, b) =>
-      val all = ps.flatMap(nodes)
-      assert(!all.exists(_.isInstanceOf[BroadcastExchangeLike]),
-        s"batch $b rebroadcast a dimension:\n${ps.mkString("\n")}")
-      assert(!all.exists(_.isInstanceOf[CollectLimitExec]),
-        s"batch $b probed for emptiness:\n${ps.mkString("\n")}")
-    }
-  }
-
-  test("per-row ForeachWriter parity sink converges to the same golden state") {
-    val base = Files.createTempDirectory("graft-replay-fe")
-    val streamDir = Files.createDirectory(base.resolve("stream"))
-    val logDir = base.resolve("eventlog").toString
-    val ckpt = base.resolve("checkpoint").toString
-    val storeName = s"replay-fe-${System.nanoTime()}"
-
-    batchOrder.zipWithIndex.foreach { case (n, i) =>
-      val dst = streamDir.resolve(s"$n.json")
-      Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst,
-        StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(System.currentTimeMillis() - 60000 + i * 1000)
-      ()
-    }
-    val q = TributePipeline.runForeach(
-      Sources.eventStream(spark, streamDir.toString),
-      Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
-      Sources.gameDim(spark, fixture("staticData/gameData.json")),
-      storeName, logDir, ckpt)
-    q.processAllAvailable()
-    q.stop()
-
-    assert(Files.list(Paths.get(logDir)).count() === 65)
-    val state = KVRegistry.getOrCreate(storeName).snapshot()
-    assert(state.size === 16)
-    assert(state("3")("status") === "DEAD")
-    assert(state("8")("status") === "ALIVE")
-    assert(state("9")("status") === "ALIVE")
-    assert(state("9")("locationStatus") === "IN BOUNDS")
-    assert(state.values.count(_("status") == "ALIVE") === 2)
   }
 
   test("broker-shaped replay: message-stream decode feeds the pipeline to the same golden state") {
@@ -551,7 +532,7 @@ class StreamingReplaySpec extends SparkSpec {
       dst.toFile.setLastModified(System.currentTimeMillis() - 60000 + i * 1000)
       ()
     }
-    val q = TributePipeline.runGoverned(
+    val q = TributePipeline.run(
       Sources.eventStream(spark, streamDir.toString),
       Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
       Sources.gameDim(spark, fixture("staticData/gameData.json")),
@@ -643,7 +624,7 @@ class StreamingReplaySpec extends SparkSpec {
     // quiesce contract documented: the batch was admitted pre-erase and
     // re-appends victim events right after the scrub
     val erased = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val q = TributePipeline.runGoverned(
+    val q = TributePipeline.run(
       Sources.eventStream(spark, streamDir.toString),
       Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
       Sources.gameDim(spark, fixture("staticData/gameData.json")),
@@ -702,7 +683,7 @@ class StreamingReplaySpec extends SparkSpec {
         ()
       }
     def drain(): Unit = {
-      val q = TributePipeline.runGoverned(
+      val q = TributePipeline.run(
         Sources.eventStream(spark, streamDir.toString),
         Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
         Sources.gameDim(spark, fixture("staticData/gameData.json")),
@@ -752,6 +733,39 @@ class StreamingReplaySpec extends SparkSpec {
       .count() === 0, "no victim object may reappear in the event log")
   }
 
+  test("file: store — a run replay is durable: a fresh client over the same root reads the converged state") {
+    val streamDir = stageAll("graft-durable-replay")
+    val base = streamDir.getParent
+    val root = base.resolve("store").toString
+    val storeName = s"file:$root"
+    val q = runIn(spark, streamDir, storeName, base)
+    q.processAllAvailable()
+    q.stop()
+    // the registry client converged
+    val state = KVRegistry.getOrCreate(storeName).snapshot()
+    assert(state.size === 16)
+    assert(state("8")("status") === "ALIVE" && state("9")("status") === "ALIVE")
+    // REAL BYTES: one file per key on disk, atomic-renamed (no temps left)
+    val files = Files.list(Paths.get(root)).iterator()
+    val names = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getFileName.toString).toSeq
+    assert(names.count(_.startsWith("k_")) === 16, s"one file per key: $names")
+    assert(!names.exists(_.endsWith(".tmp")), s"no staging temps may leak: $names")
+    // a FRESH client over the same root — another process, in effect —
+    // reads the identical state (the durability InMemoryKVStore can't offer)
+    val fresh = new graft.pipeline.FileKVStore(root)
+    assert(fresh.snapshot() === state)
+    assert(fresh.get("9").map(_("name")) === Some("Katniss"))
+    // physical delete: the key's FILE is gone, not just a map entry
+    fresh.delete("3")
+    assert(!Files.exists(Paths.get(root, "k_3")), "delete must unlink the key file")
+    assert(KVRegistry.getOrCreate(storeName).get("3").isEmpty,
+      "every client over the root must observe the physical delete")
+    // null-valued fields and odd characters round-trip through the encoding
+    fresh.put("weird/key\tname", Map("a b" -> null, "x" -> "line\nbreak\tand=%"))
+    assert(new graft.pipeline.FileKVStore(root).get("weird/key\tname")
+      === Some(Map("a b" -> null, "x" -> "line\nbreak\tand=%")))
+  }
+
   test("forgetTributes is restart-safe: replayed and future victim events never re-materialize") {
     val base = Files.createTempDirectory("graft-forget-rs")
     val streamDir = Files.createDirectory(base.resolve("stream"))
@@ -768,7 +782,7 @@ class StreamingReplaySpec extends SparkSpec {
         ()
       }
     def drain(): Unit = {
-      val q = TributePipeline.runGoverned(
+      val q = TributePipeline.run(
         Sources.eventStream(spark, streamDir.toString),
         Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
         Sources.gameDim(spark, fixture("staticData/gameData.json")),
