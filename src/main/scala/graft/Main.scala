@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
+import java.nio.file.Files
 
-import graft.ops.Status
-import graft.pipeline.TributePipeline
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
+
+import graft.model.Schemas
+import graft.pipeline.{KVRegistry, TributePipeline}
 import graft.sources.Sources
 
 /** Runnable demo of the flagship pipeline: replay event-batch JSON files in
-  * order through enrich + latest-state and print the final state table.
+  * order through `TributePipeline.run` and print the final state table.
   *
   * Usage: runMain graft.Main <streamingDataDir> <tributeCsv> <gameJson>
   */
@@ -21,6 +24,39 @@ object Main {
     "katnissEdgeOfMap", "katnissInjured", "afterSponsorHelpsKatniss",
     "afterRue", "almostTheEnd", "theEnd")
 
+  /** Stages the `.json` files of `streamDir` in a temporary directory, in
+    * replay order with ascending modification times (the file source's
+    * arrival order), drains them through `TributePipeline.run` into a
+    * `file:` store and returns the store's snapshot, tributeId → item.
+    * The store, the event log and the checkpoint live in the temporary
+    * directory, which is deleted afterwards.
+    */
+  def replay(spark: SparkSession, streamDir: String, tributeCsv: String,
+      gameJson: String): Map[String, Map[String, String]] = {
+    val files = {
+      val all = new java.io.File(streamDir).listFiles().filter(_.getName.endsWith(".json")).toSeq
+      val known = replayOrder.flatMap(n => all.find(_.getName == s"$n.json"))
+      known ++ all.filterNot(known.contains).sortBy(_.getName)
+    }
+    val work = Files.createTempDirectory("graft-main")
+    try {
+      val stream = Files.createDirectory(work.resolve("stream"))
+      val t0 = System.currentTimeMillis() - 1000L * files.size
+      files.zipWithIndex.foreach { case (f, i) =>
+        val dst = Files.copy(f.toPath, stream.resolve(f.getName))
+        dst.toFile.setLastModified(t0 + i * 1000L)
+      }
+      val storeName = s"file:${work.resolve("store")}"
+      val q = TributePipeline.run(
+        Sources.eventStream(spark, stream.toString),
+        Sources.tributeDim(spark, tributeCsv),
+        Sources.gameDim(spark, gameJson),
+        storeName, work.resolve("eventlog").toString, work.resolve("checkpoint").toString)
+      try q.processAllAvailable() finally q.stop()
+      KVRegistry.getOrCreate(storeName).snapshot()
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(work.toFile)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(streamDir, tributeCsv, gameJson) = args
     val spark = SparkSession.builder()
@@ -30,40 +66,14 @@ object Main {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // read once at context creation: with the reliable-checkpoint knob
-      // (spark.graft.checkpointDir) active, superseded superstep dirs are
-      // deleted when their RDDs are GC'd instead of growing unboundedly
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val files = {
-      val all = new java.io.File(streamDir).listFiles()
-        .filter(_.getName.endsWith(".json")).map(_.getPath).toSeq
-      val known = replayOrder.flatMap(n => all.find(_.endsWith(s"/$n.json")))
-      known ++ (all.toSet -- known.toSet).toSeq.sorted
-    }
-    // arrival order, stamped per file before the union: the file's ordinal
-    // in the replay order, then the event's index in its file. A multi-line
-    // JSON file is read as one partition, so on a one-file frame
-    // `monotonically_increasing_id` is the in-file index (< 2^33).
-    val events = files.zipWithIndex.map { case (f, i) =>
-      Sources.eventBatch(spark, f).withColumn(TributePipeline.ArrivalSeqCol,
-        lit(i.toLong << 33) + monotonically_increasing_id())
-    }.reduce(_ unionAll _)
-    val tributes = Sources.tributeDim(spark, tributeCsv)
-    val games = Sources.gameDim(spark, gameJson)
-
-    // schema introspection ×3, mirroring the reference's observability
-    // surface (reference: script/TributeStreamingJob.py:87,98,137)
-    tributes.printSchema()
-    games.printSchema()
-
-    val enriched = Status.enrich(events, tributes, games)
-    enriched.printSchema()
-    println(s"events enriched: ${enriched.count()}")
-    val state = TributePipeline.latestStatePerTribute(enriched, col(TributePipeline.ArrivalSeqCol))
-      .orderBy("tributeId")
+    val fields = Schemas.stateItemSchema.fieldNames.toSeq
+    val rows = replay(spark, streamDir, tributeCsv, gameJson).toSeq.sortBy(_._1)
+      .map { case (_, item) => Row.fromSeq(fields.map(item)) }
+    val state = spark.createDataFrame(rows.asJava, Schemas.stateItemSchema)
+    state.printSchema()
     state.show(100, truncate = false)
     spark.stop()
   }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
 
 /** K-minimum-values distinct-count sketch (Bar-Yossef et al.) as a typed
   * `Aggregator` — the deterministic, oracle-verifiable alternative to
@@ -31,35 +30,13 @@ import org.apache.spark.sql.expressions.Aggregator
   * group — and above that a plain exact count-distinct was never an option
   * anyway.
   */
-final class KMinValues(k: Int) extends Aggregator[Long, (Int, List[Long]), Long] {
+final class KMinValues(k: Int) extends BoundedBuffer[Long, Long](k, dedup = true) {
   require(k >= 2, s"k must be >= 2, got $k")
 
-  /** Buffer: (size, values DESCENDING) — the kept set is identical to
-    * the former ascending list, but the steady-state rejection test
-    * (a full buffer whose LARGEST kept value ≤ h) reads `head` and the
-    * tracked size instead of walking k cons cells per row
-    * (`lengthCompare(k)` + `last` were O(k) per input — the round-18
-    * deferred per-row cost, guide §1.2). Duplicates are absorbed (set
-    * semantics — idempotent under data duplication); a full buffer
-    * drops its head (the largest) on insert, which is the former
-    * `take(k)` from the other end.
-    */
-  private def insert(b: (Int, List[Long]), h: Long): (Int, List[Long]) = {
-    val (sz, ds) = b
-    if (sz >= k && ds.head <= h) b
-    else {
-      val (pre, post) = ds.span(_ > h)
-      if (post.headOption.contains(h)) b
-      else if (sz >= k) (sz, (pre ::: h :: post).tail)
-      else (sz + 1, pre ::: h :: post)
-    }
-  }
-
-  override def zero: (Int, List[Long]) = (0, Nil)
-  override def reduce(b: (Int, List[Long]), h: Long): (Int, List[Long]) =
-    insert(b, h)
-  override def merge(b1: (Int, List[Long]), b2: (Int, List[Long])): (Int, List[Long]) =
-    b2._2.foldLeft(b1)(insert)
+  /** Smaller hashes rank ahead, so the buffer holds its values
+    * DESCENDING; duplicates are absorbed (set semantics — idempotent
+    * under data duplication). */
+  override protected def ranksAhead(a: Long, b: Long): Boolean = a < b
 
   /** Exact size below k; otherwise the KMV inversion, in pure int64 math
     * (floor division — identical in Spark, DuckDB, and the JVM). `h_k = 0`

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
 
 /** Priority sampling (Duffield–Lund–Thorup) as a typed `Aggregator` — the
   * WEIGHTED counterpart of [[BottomKQuantile]]'s uniform bottom-k: keep
@@ -35,52 +34,24 @@ import org.apache.spark.sql.expressions.Aggregator
   * at most k+1 entries — the (k+1)-th is the threshold row τ.
   */
 final class PrioritySample(k: Int)
-    extends Aggregator[(Long, Long), (Int, List[(Long, Long)]), Seq[(Long, Long)]] {
+    extends BoundedBuffer[(Long, Long), Seq[(Long, Long)]](k + 1, dedup = true) {
   require(k >= 1, s"k must be >= 1, got $k")
 
   private def prio(p: (Long, Long)): BigInt =
     (BigInt(p._1) << 64) / (BigInt(p._2) + 1)
 
   /** Canonical order: floored priority DESC, then hash ASC, weight ASC —
-    * the exact order a SQL engine sorts `w·2⁶⁴ div (h+1)` in. */
-  private def before(a: (Long, Long), b: (Long, Long)): Boolean = {
+    * the exact order a SQL engine sorts `w·2⁶⁴ div (h+1)` in. The
+    * tie-break covers both fields, so it is a strict total order on
+    * (w, h) pairs. */
+  override protected def ranksAhead(a: (Long, Long), b: (Long, Long)): Boolean = {
     val pa = prio(a); val pb = prio(b)
     if (pa != pb) pa > pb
     else if (a._2 != b._2) a._2 < b._2
     else a._1 < b._1
   }
 
-  /** Buffer: (size, entries in REJECTION order — lowest priority first).
-    * The kept set is identical to the former best-first list; holding it
-    * reversed puts the rejection threshold at `head`, so the
-    * steady-state test (a full buffer whose worst entry beats p) stops
-    * walking k cons cells per row (`lengthCompare(k+1)` + `last` were
-    * O(k) per input — the round-19 [[KMinValues]]/[[BottomKQuantile]]
-    * representation change, guide §1.2, applied to the one sketch it
-    * deferred on). `before` is a strict total order on (w, h) pairs
-    * (the tie-break covers both fields), so span/duplicate/cap behave
-    * exactly as the best-first `span`/`take(k+1)` did, mirrored; a full
-    * buffer reached past the rejection test guarantees p beats `head`,
-    * so the dropped `tail` head is never p itself.
-    */
-  private def insert(b: (Int, List[(Long, Long)]), p: (Long, Long)): (Int, List[(Long, Long)]) = {
-    val (sz, rev) = b
-    if (sz >= k + 1 && !before(p, rev.head)) b
-    else {
-      val (worse, rest) = rev.span(q => before(p, q))
-      if (rest.headOption.contains(p)) b
-      else if (sz >= k + 1) (sz, (worse ::: p :: rest).tail)
-      else (sz + 1, worse ::: p :: rest)
-    }
-  }
-
-  override def zero: (Int, List[(Long, Long)]) = (0, Nil)
-  override def reduce(b: (Int, List[(Long, Long)]), p: (Long, Long)): (Int, List[(Long, Long)]) =
-    insert(b, p)
-  override def merge(b1: (Int, List[(Long, Long)]),
-      b2: (Int, List[(Long, Long)])): (Int, List[(Long, Long)]) =
-    b2._2.foldLeft(b1)(insert)
-  /** Output order is unchanged: priority DESC (highest first). */
+  /** Output order: priority DESC (highest first). */
   override def finish(b: (Int, List[(Long, Long)])): Seq[(Long, Long)] = b._2.reverse
 
   override def bufferEncoder: Encoder[(Int, List[(Long, Long)])] = ExpressionEncoder()

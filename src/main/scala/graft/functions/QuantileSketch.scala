@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
 
 /** Mergeable quantile sketch by deterministic bottom-k row sampling — the
   * quantile counterpart of [[KMinValues]], and the piece a streaming
@@ -41,35 +40,12 @@ import org.apache.spark.sql.expressions.Aggregator
   * sampled values sorted ASCENDING, ready for `element_at` rank picks.
   */
 final class BottomKQuantile(k: Int)
-    extends Aggregator[(Long, Long), (Int, List[(Long, Long)]), Seq[Long]] {
+    extends BoundedBuffer[(Long, Long), Seq[Long]](k, dedup = true) {
   require(k >= 2, s"k must be >= 2, got $k")
 
-  private def lt(a: (Long, Long), b: (Long, Long)): Boolean =
+  /** Lexicographically smaller pairs rank ahead. */
+  override protected def ranksAhead(a: (Long, Long), b: (Long, Long)): Boolean =
     a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
-
-  /** Buffer: (size, pairs lexicographically DESCENDING) — identical
-    * kept set to the former ascending list; the steady-state rejection
-    * (full buffer, p ≥ the largest kept pair) reads `head` and the
-    * tracked size instead of walking k cons cells per row (the
-    * KMinValues round-19 representation, see there). */
-  private def insert(b: (Int, List[(Long, Long)]),
-      p: (Long, Long)): (Int, List[(Long, Long)]) = {
-    val (sz, ds) = b
-    if (sz >= k && !lt(p, ds.head)) b
-    else {
-      val (pre, post) = ds.span(lt(p, _))
-      if (post.headOption.contains(p)) b
-      else if (sz >= k) (sz, (pre ::: p :: post).tail)
-      else (sz + 1, pre ::: p :: post)
-    }
-  }
-
-  override def zero: (Int, List[(Long, Long)]) = (0, Nil)
-  override def reduce(b: (Int, List[(Long, Long)]),
-      p: (Long, Long)): (Int, List[(Long, Long)]) = insert(b, p)
-  override def merge(b1: (Int, List[(Long, Long)]),
-      b2: (Int, List[(Long, Long)])): (Int, List[(Long, Long)]) =
-    b2._2.foldLeft(b1)(insert)
 
   /** The sample's values in ascending order — the hash was only the
     * sampling device; rank picks happen over values. */

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
 
 /** One scored candidate in a per-group top-k. */
 final case class Scored(neighborId: Long, cosine: Double)
@@ -21,7 +20,7 @@ final case class Scored(neighborId: Long, cosine: Double)
   * O(|corpus|·|queries|) to O(partitions·k·|queries|), and no reducer ever
   * sorts more than partitions·k rows per group.
   *
-  * The buffer is a best-first sorted list capped at k (insertion into a
+  * The buffer is a [[BoundedBuffer]] of k entries (insertion into a
   * ≤k list — k is small; no heap needed). Total order (cosine DESC,
   * neighborId ASC) makes the result deterministic and bit-identical to the
   * `row_number`-over-total-order formulation it replaces. The comparison
@@ -32,35 +31,14 @@ final case class Scored(neighborId: Long, cosine: Double)
   * Spark and DuckDB order NaN in a DESC sort.
   */
 final class BoundedTopK(k: Int)
-    extends Aggregator[Scored, (Int, List[Scored]), Seq[Scored]] {
+    extends BoundedBuffer[Scored, Seq[Scored]](k, dedup = false) {
   require(k > 0, s"k must be positive, got $k")
 
-  private def beats(a: Scored, b: Scored): Boolean = {
+  override protected def ranksAhead(a: Scored, b: Scored): Boolean = {
     val c = java.lang.Double.compare(a.cosine, b.cosine)
     c > 0 || (c == 0 && a.neighborId < b.neighborId)
   }
 
-  /** Buffer: (size, WORST-first list) — same kept set as the former
-    * best-first list; the steady-state rejection (full buffer whose
-    * worst entry beats x) reads `head` and the tracked size instead of
-    * walking k cons cells per row (the KMinValues round-19
-    * representation). A full buffer drops its head (the worst) on
-    * insert — the former `take(k)` from the best end. */
-  private def insert(b: (Int, List[Scored]), x: Scored): (Int, List[Scored]) = {
-    val (sz, wf) = b
-    if (sz >= k && beats(wf.head, x)) b
-    else {
-      val (pre, post) = wf.span(beats(x, _))
-      if (sz >= k) (sz, (pre ::: x :: post).tail)
-      else (sz + 1, pre ::: x :: post)
-    }
-  }
-
-  override def zero: (Int, List[Scored]) = (0, Nil)
-  override def reduce(b: (Int, List[Scored]), x: Scored): (Int, List[Scored]) =
-    insert(b, x)
-  override def merge(b1: (Int, List[Scored]), b2: (Int, List[Scored])): (Int, List[Scored]) =
-    b2._2.foldLeft(b1)(insert)
   override def finish(b: (Int, List[Scored])): Seq[Scored] = b._2.reverse
 
   override def bufferEncoder: Encoder[(Int, List[Scored])] = ExpressionEncoder()

@@ -4,7 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The five categorical status classifiers, as pure `Column => Column`
-  * functions so they are unit-testable and reusable batch or streaming.
+  * functions so they are unit-testable, and the two column sets the
+  * flagship's compiled micro-batch (`graft.pipeline.FlagshipPayload`)
+  * binds: the derived status columns ([[derive]]) and the state item
+  * ([[stateItemCols]]).
   *
   * Semantics replicate the reference's ordered CASE logic exactly
   * (reference: script/TributeStreamingJob.py:110-135). Mixed-type
@@ -54,27 +57,10 @@ object Status {
         "APPROACHING THE BOUNDARY")
       .otherwise("IN BOUNDS")
 
-  /** Full enrichment: events ⋈ tributes (on tributeid, case-insensitive —
-    * reference: script/TributeStreamingJob.py:106) ⋈ games (on gameid, :107),
-    * then the five derived status columns. Inner joins: events with unknown
-    * tribute/game ids silently drop, preserved deliberately (SURVEY §7.4
-    * risk 4).
-    *
-    * Works identically on a batch or a streaming `events` frame: the
-    * stream-static joins are stateless and plan as BroadcastHashJoin when
-    * the dims are small/cached. The streaming pipeline enriches through
-    * `graft.pipeline.DimensionLookup` instead, which emits the same columns
-    * from dimensions broadcast once per query.
-    */
-  def enrich(events: DataFrame, tributes: DataFrame, games: DataFrame): DataFrame =
-    derive(events
-      .join(broadcast(tributes), Seq("tributeid"))
-      .join(broadcast(games), Seq("gameid")))
-
   /** The five derived status columns, appended by column name to a frame
     * that already carries the event measures and both dimensions'
-    * thresholds and bounds — the one copy of the CASE logic behind every
-    * enrichment path.
+    * thresholds and bounds (reference: script/TributeStreamingJob.py:
+    * 106-135, after its two joins) — the one copy of the CASE logic.
     */
   def derive(joined: DataFrame): DataFrame =
     joined
@@ -92,9 +78,9 @@ object Status {
           col("minYCoordinate"), col("maxYCoordinate")))
 
   /** The 12 sink-side state-item columns: projection + rename + casts
-    * (reference: script/TributeStreamingJob.py:52-65). Exposed as columns
-    * (not only as a transform) so per-row sinks can pack them into a
-    * struct alongside other payload columns.
+    * (reference: script/TributeStreamingJob.py:52-65), packed into a
+    * struct in the flagship payload. Done in the plan — not in the
+    * writer — so Catalyst can prune columns upstream.
     */
   def stateItemCols: Seq[Column] = Seq(
     col("tributeid").cast("string").as("tributeId"),
@@ -110,10 +96,4 @@ object Status {
     col("ycoordinate").cast("string").as("yCoordinate"),
     col("locationstatus").as("locationStatus"),
   )
-
-  /** Sink-side projection to the 12-field state item. Done in the plan —
-    * not in the writer — so Catalyst can prune columns upstream.
-    */
-  def stateItem(enriched: DataFrame): DataFrame =
-    enriched.select(stateItemCols: _*)
 }

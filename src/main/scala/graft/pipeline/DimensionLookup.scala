@@ -1,34 +1,32 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.ops.Status
-
 /** The two enrichment dimensions, collected once and broadcast as
-  * key → rows maps: the streaming pipeline's stand-in for `Status.enrich`'s
-  * broadcast joins, which re-broadcast both dimensions on every
-  * micro-batch. The reference likewise reads its dimensions once, at job
-  * start (reference: script/TributeStreamingJob.py:85-97); a dimension
-  * change takes a query restart, exactly as with the cached frames the
-  * join path reads.
+  * key → rows maps: the flagship's stream-static joins (reference:
+  * script/TributeStreamingJob.py:106-107) without a join in any plan and
+  * without re-broadcasting the dimensions on every micro-batch. The
+  * reference likewise reads its dimensions once, at job start (reference:
+  * script/TributeStreamingJob.py:85-97); a dimension change takes a query
+  * restart.
   *
-  * The lookup keeps the inner-join semantics of `Status.enrich`: a key
+  * The lookup keeps the semantics of the reference's inner joins: a key
   * matches by equality of values of the same type, null and unknown keys
   * drop, and a key repeated in a dimension fans the event out once per
-  * dimension row. Key columns resolve case-insensitively, as the join's
-  * do under the default `spark.sql.caseSensitive=false`. The output
-  * columns are the join's, in the join's order: the event's `gameid` and
+  * dimension row. Key columns resolve case-insensitively, as the
+  * reference's USING joins do under the default
+  * `spark.sql.caseSensitive=false`. The output columns are those joins',
+  * in their order: the event's `gameid` and
   * `tributeid` (the event's spelling), the event's other columns, the
   * tribute dimension's non-key columns, then the game dimension's.
   *
-  * The join itself is one function over Catalyst rows, [[rowJoin]]: the
-  * streaming pipeline runs it inside its compiled micro-batch
-  * ([[FlagshipPayload]]), and [[enrich]] wraps the same function as a
-  * DataFrame for batch callers.
+  * The join itself is one function over Catalyst rows, [[rowJoin]], which
+  * the streaming pipeline runs inside its compiled micro-batch
+  * ([[FlagshipPayload]]).
   */
 final class DimensionLookup private (
     tributeKeyType: DataType,
@@ -37,21 +35,8 @@ final class DimensionLookup private (
     gameFields: Seq[StructField],
     maps: Broadcast[DimensionLookup.Maps]) {
 
-  /** `Status.enrich`'s output, without a join in the plan: [[rowJoin]]
-    * over each partition plus the five derived status columns. */
-  def enrich(events: DataFrame): DataFrame = {
-    val in = events.schema
-    val join = rowJoin(in)
-    Status.derive(events.mapPartitions { rows: Iterator[Row] =>
-      val toInternal = CatalystTypeConverters.createToCatalystConverter(in)
-      val toRow = CatalystTypeConverters.createToScalaConverter(join.schema)
-      rows.flatMap(r => join(toInternal(r).asInstanceOf[InternalRow]))
-        .map(toRow(_).asInstanceOf[Row])
-    }(Encoders.row(join.schema)))
-  }
-
   /** The hash join of rows of schema `events` against both broadcast maps. */
-  private[pipeline] def rowJoin(events: StructType): DimensionLookup.RowJoin = {
+  private[graft] def rowJoin(events: StructType): DimensionLookup.RowJoin = {
     val fields = events.fields
     val t = DimensionLookup.keyIndex(events, "tributeid")
     val g = DimensionLookup.keyIndex(events, "gameid")

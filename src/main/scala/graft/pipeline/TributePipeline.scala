@@ -10,11 +10,9 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, MapType, StringType, StructType}
 
-import graft.ops.Status
 import graft.streaming.LocalCheckpointFileManager
 
 /** Keyed last-writer-wins state sink — the engine-side equivalent of the
@@ -27,6 +25,8 @@ trait KVStore extends Serializable {
   def put(key: String, item: Map[String, String]): Unit
   def get(key: String): Option[Map[String, String]]
   def snapshot(): Map[String, Map[String, String]]
+  /** The stored keys: `snapshot().keySet` without reading any item. */
+  def keys(): Set[String]
   /** Physical key removal — the compliance-erase primitive (DynamoDB
     * `delete_item` in the reference's deployment). Idempotent: deleting
     * an absent key is a no-op. */
@@ -52,6 +52,7 @@ final class InMemoryKVStore extends KVStore {
   override def put(key: String, item: Map[String, String]): Unit = m.put(key, item)
   override def get(key: String): Option[Map[String, String]] = Option(m.get(key))
   override def snapshot(): Map[String, Map[String, String]] = m.asScala.toMap
+  override def keys(): Set[String] = m.keySet.asScala.toSet
   override def delete(key: String): Unit = { m.remove(key); () }
 }
 
@@ -120,19 +121,28 @@ final class FileKVStore(root: String) extends KVStore {
 
   override def snapshot(): Map[String, Map[String, String]] = {
     val out = Map.newBuilder[String, Map[String, String]]
-    val stream = JFiles.list(rootPath)
-    try stream.iterator().asScala.foreach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("k_")) {
-        try out += dec(n.stripPrefix("k_")) ->
-          parse(JFiles.readString(p, StandardCharsets.UTF_8))
-        catch {
-          case _: java.nio.file.NoSuchFileException => // deleted mid-scan
-          case _: java.io.FileNotFoundException =>
-        }
+    keyFiles().foreach { case (key, p) =>
+      try out += key -> parse(JFiles.readString(p, StandardCharsets.UTF_8))
+      catch {
+        case _: java.nio.file.NoSuchFileException => // deleted mid-scan
+        case _: java.io.FileNotFoundException =>
       }
-    } finally stream.close()
+    }
     out.result()
+  }
+
+  /** A directory listing only: a key deleted mid-scan is either listed or
+    * not, and no file is opened. */
+  override def keys(): Set[String] = keyFiles().map(_._1).toSet
+
+  /** Each key with its file, from one listing of the root. */
+  private def keyFiles(): Seq[(String, java.nio.file.Path)] = {
+    val stream = JFiles.list(rootPath)
+    try stream.iterator().asScala
+      .map(p => p -> p.getFileName.toString)
+      .collect { case (p, n) if n.startsWith("k_") => dec(n.stripPrefix("k_")) -> p }
+      .toList
+    finally stream.close()
   }
 
   override def delete(key: String): Unit = {
@@ -195,36 +205,23 @@ private[pipeline] final class SerializableHadoopConf(
   * is admitted against the standing forget store of [[forgetTributes]];
   * see [[run]].
   *
+  * This is the one enrichment and the one last-writer-wins in graft: the
+  * `graft.Main` demo replays its fixture directory through [[run]] as well,
+  * and the specs check the runner against a DataFrame reference of the
+  * same path (broadcast joins and a window) that lives in test scope.
+  *
   * At-least-once delivery from checkpointing + idempotent keyed upsert +
   * idempotent path-keyed log writes ⇒ converged output is effectively
   * exactly-once (SURVEY §2 #23).
   */
 object TributePipeline {
 
-  /** Name of the arrival-sequence column, stamped on each event by [[run]]
-    * (and by `graft.Main` on its batch replay). */
-  val ArrivalSeqCol = "__arrival_seq"
-
-  // the source side of the streaming runner's arrival order, stamped at
-  // wiring time: a file's modification time (µs) and path
+  // the runner's arrival order: a file's modification time (µs) and path,
+  // stamped on the streaming frame at wiring time, then the in-partition
+  // id, stamped on each raw batch row by the payload pass
+  private[pipeline] val ArrivalSeqCol = "__arrival_seq"
   private[pipeline] val ArrivalMTimeCol = "__arrival_mtime"
   private[pipeline] val ArrivalPathCol = "__arrival_path"
-
-  /** Enriched rows → 12-field state items, one per tribute: the event with
-    * the highest `arrivalSeq` per tribute wins (reference semantics: last
-    * processed event per key, README.md:109-111). `arrivalSeq` must be an
-    * expression over `enriched`'s columns that is monotone in arrival
-    * order — a source offset, a (batch ordinal, record index) encoding, or
-    * a column stamped on the raw source scan before any shuffle.
-    */
-  def latestStatePerTribute(enriched: DataFrame, arrivalSeq: Column): DataFrame = {
-    val w = Window.partitionBy(col("tributeid")).orderBy(arrivalSeq.desc)
-    val latest = enriched
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    Status.stateItem(latest)
-  }
 
   /** JSON-serialize a full row with the reference's decimal parity: the
     * reference's `DecimalEncoder` renders `Decimal` values as JSON
@@ -294,8 +291,9 @@ object TributePipeline {
     * is one ordered partition (one shard, one file per trigger) — as the
     * reference's single Kinesis shard is.
     *
-    * Each batch is admitted against a snapshot of the forget store of
-    * [[forgetTributes]], taken at batch start: events of forgotten tributes
+    * Each batch is admitted against the key set of the forget store of
+    * [[forgetTributes]] (`KVStore.keys`, no item is read), taken at batch
+    * start: events of forgotten tributes
     * are dropped inside the payload pass, before the shuffle, so neither
     * sink ever sees them again — including on checkpoint-restart replays
     * (the store is consulted at batch time, not at wiring time, so requests
@@ -332,14 +330,14 @@ object TributePipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val forget = KVRegistry.getOrCreate(forgetStoreName(storeName))
-        val forgotten = forget.snapshot().keySet
+        val forgotten = forget.keys()
         onBatchAdmitted()
         writeBatch(payload, batch, forgotten, storeName, logDir)
         // an erase that landed after this batch's admission snapshot saw a
         // log and state that this batch's writes may have just re-polluted:
         // re-scrub those victims now (idempotent, so a victim the batch
         // never touched costs one no-op pass)
-        val raced = (forget.snapshot().keySet -- forgotten).toSeq.sorted
+        val raced = (forget.keys() -- forgotten).toSeq.sorted
         if (raced.nonEmpty) {
           scrubVictims(batch.sparkSession, raced, storeName, logDir)
           ()

@@ -47,7 +47,8 @@ object Sources {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .json(dir)
 
-  /** Batch read of the same event fixtures (slice-0 batch-mode flagship). */
+  /** Batch read of one event fixture file, as the specs' DataFrame
+    * reference of the flagship reads them. */
   def eventBatch(spark: SparkSession, path: String): DataFrame =
     spark.read
       .schema(Schemas.eventSchema)
@@ -68,10 +69,12 @@ object Sources {
 
   /** Production streaming source: a Kafka topic of JSON events, decoded
     * under the declared schema. TRIM_HORIZON ≡ startingOffsets=earliest
-    * (reference: script/TributeStreamingJob.py:101-103). The broker's
-    * per-partition `offset` column is the natural explicit `arrivalSeq`
-    * for TributePipeline.latestStatePerTribute — project it alongside the
-    * decoded fields if LWW must survive downstream shuffles.
+    * (reference: script/TributeStreamingJob.py:101-103). The decode keeps
+    * the event fields only: the broker's `partition`, `offset` and
+    * `timestamp` are dropped, so `TributePipeline.run` orders these events
+    * by their in-partition id, which tracks arrival order only while a
+    * batch is one ordered partition. Carrying the broker's position
+    * through the decode is ROADMAP item 11.
     */
   def eventStreamKafka(
       spark: SparkSession,
@@ -88,9 +91,10 @@ object Sources {
 
   /** Kinesis record batches carry their payload in a binary `data` column
     * (vs Kafka's `value`); everything after that rename is the shared
-    * declared-schema decode. `sequenceNumber` is the per-shard arrival
-    * order — the natural explicit `arrivalSeq` for
-    * TributePipeline.latestStatePerTribute, mirroring Kafka's `offset`.
+    * declared-schema decode. Like the Kafka decode it drops the record's
+    * position (`shardId`, `sequenceNumber`, `approximateArrivalTimestamp`),
+    * so `TributePipeline.run` orders these events by their in-partition
+    * id; ROADMAP item 11 carries the position through.
     */
   def decodeKinesisRecords(raw: DataFrame): DataFrame =
     decodeEventValue(raw.select(col("data").as("value")))

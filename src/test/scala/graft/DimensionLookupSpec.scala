@@ -13,9 +13,10 @@ import graft.ops.Status
 import graft.pipeline.{DimensionLookup, FlagshipPayload, KVStore, TributePipeline}
 import graft.sources.Sources
 
-/** The streaming pipeline's lookup enrichment against `Status.enrich`,
-  * the broadcast-join reference: the same columns in the same order with
-  * the same types, the same rows, and byte-identical event-log JSON; and
+/** The streaming pipeline's lookup enrichment against
+  * `FlagshipReference.enrich`, the broadcast-join reference: the same
+  * columns in the same order with the same types, the same rows, and
+  * byte-identical event-log JSON; and
   * the pipeline's compiled micro-batch payload against the same reference,
   * forget filter included. */
 class DimensionLookupSpec extends SparkSpec {
@@ -56,8 +57,8 @@ class DimensionLookupSpec extends SparkSpec {
 
   /** Schema, rows and log JSON of both paths must agree; returns the row count. */
   private def assertSame(ev: DataFrame): Long = {
-    val viaJoin = Status.enrich(ev, tributes, games)
-    val viaLookup = lookup.enrich(ev)
+    val viaJoin = FlagshipReference.enrich(ev, tributes, games)
+    val viaLookup = FlagshipReference.lookupEnrich(lookup, ev)
     assert(viaLookup.schema === viaJoin.schema)
     def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
     def logs(df: DataFrame) = df.select(TributePipeline.rowJson(df)).collect().map(_.getString(0)).sorted.toSeq
@@ -91,13 +92,13 @@ class DimensionLookupSpec extends SparkSpec {
     // the output carries the event's spelling of the key, as the join's
     // USING key does, though the tribute CSV's header reads "tributeId"
     assert(tributes.columns.contains("tributeId"))
-    assert(lookup.enrich(edges).columns.take(3).toSeq === Seq("gameid", "tributeid", "streamingeventid"))
+    assert(FlagshipReference.lookupEnrich(lookup, edges).columns.take(3).toSeq === Seq("gameid", "tributeid", "streamingeventid"))
   }
 
   test("lookup keys resolve case-insensitively, like the join's") {
     val shouty = tributes.withColumnRenamed("tributeId", "TRIBUTEID")
-    val viaLookup = DimensionLookup(shouty, games).enrich(fixtureEvents)
-    val viaJoin = Status.enrich(fixtureEvents, shouty, games)
+    val viaLookup = FlagshipReference.lookupEnrich(DimensionLookup(shouty, games), fixtureEvents)
+    val viaJoin = FlagshipReference.enrich(fixtureEvents, shouty, games)
     assert(viaLookup.schema === viaJoin.schema)
     assert(viaLookup.count() === 65)
   }
@@ -119,7 +120,7 @@ class DimensionLookupSpec extends SparkSpec {
   test("mismatched key types fail loudly instead of silently dropping every event") {
     val numeric = tributes.withColumn("tributeId", org.apache.spark.sql.functions.col("tributeId").cast("int"))
     val e = intercept[IllegalArgumentException] {
-      DimensionLookup(numeric, games).enrich(fixtureEvents)
+      FlagshipReference.lookupEnrich(DimensionLookup(numeric, games), fixtureEvents)
     }
     assert(e.getMessage.contains("key types"))
   }
@@ -151,7 +152,7 @@ class DimensionLookupSpec extends SparkSpec {
   /** The same payload from the DataFrame path: the broadcast join,
     * `rowJson` and `Status.stateItemCols`. */
   private def reference(ev: DataFrame): Payload = {
-    val enriched = Status.enrich(ev, tributes, games)
+    val enriched = FlagshipReference.enrich(ev, tributes, games)
     enriched.select(col("tributeid").cast("string"), col("streamingeventid").cast("string"),
       TributePipeline.rowJson(enriched), struct(Status.stateItemCols: _*))
       .collect().toSeq

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.operators.Relational
@@ -312,10 +312,10 @@ class PlanShapeSpec extends SparkSpec {
   test("q84: sparse top-k ranks through the bounded aggregate, not a window") {
     val df = graft.operators.Similarity.sparseLexicalTopK(
       graft.sources.Tables.documents(spark, sf0001))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
+    val plan = df.queryExecution.executedPlan
+    assert(nodes(df).exists(_.isInstanceOf[ObjectHashAggregateExec]),
       s"BoundedTopK must rank via ObjectHashAggregate:\n$plan")
-    assert(!plan.contains("Window"),
+    assert(!nodes(df).exists(_.isInstanceOf[WindowExec]),
       s"ranking must not window over the full scored relation:\n$plan")
   }
 
@@ -400,10 +400,10 @@ class PlanShapeSpec extends SparkSpec {
   test("q193: domain cap ranks via the bounded aggregate, never a corpus window") {
     val df = graft.operators.Prep.domainCap(
       graft.sources.Tables.documents(spark, sf0001))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
+    val plan = df.queryExecution.executedPlan
+    assert(nodes(df).exists(_.isInstanceOf[ObjectHashAggregateExec]),
       s"per-source top-k must be the map-side-bounded aggregate:\n$plan")
-    assert(!plan.contains("Window"),
+    assert(!nodes(df).exists(_.isInstanceOf[WindowExec]),
       s"capping must not shuffle the corpus into a per-source window:\n$plan")
   }
 
@@ -654,10 +654,10 @@ class PlanShapeSpec extends SparkSpec {
   test("q213: ADC ranking goes through the bounded aggregate; the encoded corpus never re-sorts") {
     val df = graft.operators.Similarity.pqAdcTopK(
       graft.sources.Tables.embeddings(spark, sf0001))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
+    val plan = df.queryExecution.executedPlan
+    assert(nodes(df).exists(_.isInstanceOf[ObjectHashAggregateExec]),
       s"BoundedTopK must rank via ObjectHashAggregate:\n$plan")
-    assert(!plan.contains("WindowExec") && !nodes(df).exists(_.isInstanceOf[WindowExec]),
+    assert(!nodes(df).exists(_.isInstanceOf[WindowExec]),
       s"no per-query ranking window over |corpus|×|queries| scored rows:\n$plan")
     Caches.releaseAll()
     spark.catalog.clearCache()

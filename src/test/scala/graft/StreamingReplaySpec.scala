@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -28,17 +28,6 @@ class StreamingReplaySpec extends SparkSpec {
     val ckpt = base.resolve("checkpoint").toString
     val storeName = s"replay-${System.nanoTime()}"
 
-    // stage fixture files one at a time with ascending mtimes so the file
-    // source's arrival order is the documented send order
-    def stage(names: Seq[String], t0: Long): Unit =
-      names.zipWithIndex.foreach { case (n, i) =>
-        val dst = streamDir.resolve(s"$n.json")
-        Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(t0 + i * 1000)
-        ()
-      }
-
     var inputRows = 0L
     def runUntilDrained(): Unit = {
       val events = Sources.eventStream(spark, streamDir.toString)
@@ -51,10 +40,10 @@ class StreamingReplaySpec extends SparkSpec {
     }
 
     val t0 = System.currentTimeMillis() - 60000
-    stage(batchOrder.take(5), t0)
+    stageFiles(streamDir, batchOrder.take(5), t0)
     runUntilDrained() // first incarnation: 5 batches, then "crash"
 
-    stage(batchOrder.drop(5), t0 + 10000)
+    stageFiles(streamDir, batchOrder.drop(5), t0 + 10000)
     runUntilDrained() // recovery: same checkpoint resumes at batch 6
     // the source reports each event once: one scan per micro-batch
     assert(inputRows === 65, s"numInputRows summed to $inputRows over 65 events")
@@ -86,9 +75,10 @@ class StreamingReplaySpec extends SparkSpec {
     assert(!logged1.contains("\"heartrate\":70"), s"got: $logged1")
   }
 
-  /** The full 16-item golden state, from the batch path with a
-    * data-derived arrival sequence (FlagshipBatchSpec pins it): batch
-    * ordinal in the send order, then the event's ordinal in its batch. */
+  /** The full 16-item golden state, from the DataFrame reference
+    * ([[FlagshipReference]], FlagshipBatchSpec pins it) with a
+    * data-derived arrival sequence: batch ordinal in the send order, then
+    * the event's ordinal in its batch. */
   private lazy val goldenState: Map[String, Map[String, String]] = {
     import org.apache.spark.sql.functions._
     val stamped = batchOrder.zipWithIndex.map { case (b, i) =>
@@ -96,8 +86,8 @@ class StreamingReplaySpec extends SparkSpec {
         .withColumn("__seq", lit(i.toLong * 1000000L) +
           regexp_extract(col("streamingeventid"), "Event(\\d+)$", 1).cast("long"))
     }.reduce(_ unionAll _)
-    val state = TributePipeline.latestStatePerTribute(
-      graft.ops.Status.enrich(stamped,
+    val state = FlagshipReference.latestStatePerTribute(
+      FlagshipReference.enrich(stamped,
         Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
         Sources.gameDim(spark, fixture("staticData/gameData.json"))),
       col("__seq"))
@@ -109,7 +99,8 @@ class StreamingReplaySpec extends SparkSpec {
   }
 
   /** Copies fixture batches into `streamDir`, their modification times
-    * ascending from `t0` in the given order. */
+    * ascending from `t0` in the given order, so the file source's arrival
+    * order is the documented send order. */
   private def stageFiles(streamDir: Path, names: Seq[String], t0: Long): Unit =
     names.zipWithIndex.foreach { case (n, i) =>
       val dst = streamDir.resolve(s"$n.json")
@@ -124,6 +115,13 @@ class StreamingReplaySpec extends SparkSpec {
     val streamDir = Files.createDirectories(Files.createTempDirectory(prefix).resolve("stream"))
     stageFiles(streamDir, batchOrder, System.currentTimeMillis() - 60000)
     streamDir
+  }
+
+  test("graft.Main replays the fixture directory through the runner to the golden state") {
+    val state = Main.replay(spark, fixture("streamingData"),
+      fixture("staticData/tributeData.csv"), fixture("staticData/gameData.json"))
+    assert(goldenState.size === 16)
+    assert(state === goldenState)
   }
 
   private def runIn(
@@ -311,9 +309,7 @@ class StreamingReplaySpec extends SparkSpec {
         drained()
         val t0 = System.currentTimeMillis() - 60000
         batchOrder.take(4).zipWithIndex.map { case (n, i) =>
-          val dst = streamDir.resolve(s"$n.json")
-          Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst)
-          dst.toFile.setLastModified(t0 + i * 1000)
+          stageFiles(streamDir, Seq(n), t0 + i * 1000)
           q.processAllAvailable()
           drained()
         }.unzip
@@ -490,13 +486,7 @@ class StreamingReplaySpec extends SparkSpec {
     // leg 2: the same batches through the file source (the replay path)
     val streamDir = Files.createDirectory(base.resolve("stream"))
     val t0 = System.currentTimeMillis() - 60000
-    batchOrder.zipWithIndex.foreach { case (n, i) =>
-      val dst = streamDir.resolve(s"$n.json")
-      Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst,
-        StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(t0 + i * 1000)
-      ()
-    }
+    stageFiles(streamDir, batchOrder, t0)
     val fileStore = s"kafka-seam-file-${System.nanoTime()}"
     val qf = TributePipeline.run(
       Sources.eventStream(spark, streamDir.toString),
@@ -525,13 +515,7 @@ class StreamingReplaySpec extends SparkSpec {
     val ckpt = base.resolve("checkpoint").toString
     val storeName = s"forget-${System.nanoTime()}"
 
-    batchOrder.take(5).zipWithIndex.foreach { case (n, i) =>
-      val dst = streamDir.resolve(s"$n.json")
-      Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst,
-        StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(System.currentTimeMillis() - 60000 + i * 1000)
-      ()
-    }
+    stageFiles(streamDir, batchOrder.take(5), System.currentTimeMillis() - 60000)
     val q = TributePipeline.run(
       Sources.eventStream(spark, streamDir.toString),
       Sources.tributeDim(spark, fixture("staticData/tributeData.csv")),
@@ -612,13 +596,7 @@ class StreamingReplaySpec extends SparkSpec {
     val ckpt = base.resolve("checkpoint").toString
     val storeName = s"forget-race-${System.nanoTime()}"
 
-    batchOrder.take(5).zipWithIndex.foreach { case (n, i) =>
-      val dst = streamDir.resolve(s"$n.json")
-      Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst,
-        StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(System.currentTimeMillis() - 60000 + i * 1000)
-      ()
-    }
+    stageFiles(streamDir, batchOrder.take(5), System.currentTimeMillis() - 60000)
     // the erase fires INSIDE the first batch, after its admission
     // snapshot is taken and before its writes — the exact race the old
     // quiesce contract documented: the batch was admitted pre-erase and
@@ -674,14 +652,6 @@ class StreamingReplaySpec extends SparkSpec {
     val kvRoot = base.resolve("kvstore").toString
     val storeName = s"file:$kvRoot"
 
-    def stage(names: Seq[String], t0: Long): Unit =
-      names.zipWithIndex.foreach { case (n, i) =>
-        val dst = streamDir.resolve(s"$n.json")
-        Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(t0 + i * 1000)
-        ()
-      }
     def drain(): Unit = {
       val q = TributePipeline.run(
         Sources.eventStream(spark, streamDir.toString),
@@ -693,7 +663,7 @@ class StreamingReplaySpec extends SparkSpec {
     }
 
     val t0 = System.currentTimeMillis() - 60000
-    stage(batchOrder.take(5), t0)
+    stageFiles(streamDir, batchOrder.take(5), t0)
     drain() // first incarnation, then "crash"
 
     // state converged to real files: one per tribute, readable by a
@@ -719,7 +689,7 @@ class StreamingReplaySpec extends SparkSpec {
 
     // recovery: the checkpoint resumes; later fixtures carry tribute-3
     // events, which the governed filter must drop BEFORE either sink
-    stage(batchOrder.drop(5), t0 + 10000)
+    stageFiles(streamDir, batchOrder.drop(5), t0 + 10000)
     drain()
 
     val state = new graft.pipeline.FileKVStore(kvRoot).snapshot()
@@ -766,6 +736,23 @@ class StreamingReplaySpec extends SparkSpec {
       === Some(Map("a b" -> null, "x" -> "line\nbreak\tand=%")))
   }
 
+  test("KVStore.keys is the snapshot's key set on both stores, side tables and staging temps excluded") {
+    val root = Files.createTempDirectory("graft-kv-keys")
+    val storeName = s"file:$root"
+    // a file: store's forget and tombstone tables are subdirectories of
+    // its root, and a put stages its item in a temp file there
+    KVRegistry.getOrCreate(TributePipeline.forgetStoreName(storeName)).put("3", Map("tributeId" -> "3"))
+    KVRegistry.getOrCreate(TributePipeline.tombstoneStoreName(storeName)).put("3", Map("tributeId" -> "3"))
+    Files.createTempFile(root, ".put-", ".tmp")
+    for (store <- Seq(new graft.pipeline.InMemoryKVStore, new graft.pipeline.FileKVStore(root.toString))) {
+      assert(store.keys() === Set.empty && store.snapshot().isEmpty)
+      Seq("3", "9", "weird/key\tname", "k_x").foreach(k => store.put(k, Map("tributeId" -> k, "n" -> null)))
+      store.delete("3")
+      assert(store.keys() === store.snapshot().keySet)
+      assert(store.keys() === Set("9", "weird/key\tname", "k_x"))
+    }
+  }
+
   test("forgetTributes is restart-safe: replayed and future victim events never re-materialize") {
     val base = Files.createTempDirectory("graft-forget-rs")
     val streamDir = Files.createDirectory(base.resolve("stream"))
@@ -773,14 +760,6 @@ class StreamingReplaySpec extends SparkSpec {
     val ckpt = base.resolve("checkpoint").toString
     val storeName = s"forget-rs-${System.nanoTime()}"
 
-    def stage(names: Seq[String], t0: Long): Unit =
-      names.zipWithIndex.foreach { case (n, i) =>
-        val dst = streamDir.resolve(s"$n.json")
-        Files.copy(Paths.get(fixture(s"streamingData/$n.json")), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(t0 + i * 1000)
-        ()
-      }
     def drain(): Unit = {
       val q = TributePipeline.run(
         Sources.eventStream(spark, streamDir.toString),
@@ -792,7 +771,7 @@ class StreamingReplaySpec extends SparkSpec {
     }
 
     val t0 = System.currentTimeMillis() - 60000
-    stage(batchOrder.take(5), t0)
+    stageFiles(streamDir, batchOrder.take(5), t0)
     drain() // first incarnation, then "crash"
 
     // the forget request lands while the query is down
@@ -801,7 +780,7 @@ class StreamingReplaySpec extends SparkSpec {
     // recovery: the checkpoint resumes at batch 6; afterRue/almostTheEnd/
     // theEnd all carry tribute-3 events, which the governed filter must
     // drop BEFORE either sink
-    stage(batchOrder.drop(5), t0 + 10000)
+    stageFiles(streamDir, batchOrder.drop(5), t0 + 10000)
     drain()
 
     val state = KVRegistry.getOrCreate(storeName).snapshot()
