@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -20,11 +19,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = SparkEntry.sweepSession(cpus)
       // Off-heap Tungsten memory (the round-11 ScaleSmoke adoption,
       // re-verified on this full sweep: 235 queries 164.4 s off-heap vs
       // 174.3 s on-heap, zero regressions past 1.5x, GC-band heavies
@@ -74,20 +69,13 @@ object Bench {
     // a time if at least one rep SUCCEEDED (best successful rep). Queries
     // with zero successful reps are excluded from the total and surfaced in
     // an "errors" object instead.
-    // Optional comma-separated qNN prefixes for targeted re-measurement
-    // (e.g. SPARK_GRAFT_ONLY=q45,q39); unset = full sweep (driver mode).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // artifact name -> the first query whose reps triggered its build:
     // the sweep gate re-measures a flagged BUILD by re-running that
     // consumer against a cleared store, so the mapping must be recorded
     val buildConsumers = scala.collection.mutable.LinkedHashMap[String, String]()
-    // boundary-exact prefix match: "q21" selects q21_* only, never q210_*
-    // (bare startsWith made targeted audit-family runs drag in the whole
-    // q210-q219 block)
-    def selected(name: String, prefixes: Set[String]): Boolean =
-      prefixes.exists(p => name == p || name.startsWith(p + "_"))
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(selected(name, _)) }
+      // targeted re-measurement: SPARK_GRAFT_ONLY=q45,q39; unset = full sweep
+      .filter { case (name, _) => SparkEntry.selected(name) }
       .map { case (name, fn) =>
       val buildsBefore = Derived.buildSeconds.keySet
       def rep(): Either[String, Double] = {

@@ -30,7 +30,8 @@ import org.apache.spark.sql.DataFrame
   *    durable store forever by default
   *    (`spark.cleaner.referenceTracking.cleanCheckpoints` is false).
   *    Every in-repo session builder that can exercise this path
-  *    (Main, Verify, the test harness) therefore sets it to `true` —
+  *    (`SparkEntry.sweepSession`, which Bench, Verify and ScaleSmoke
+  *    build on, and the test harness) therefore sets it to `true` —
   *    the context cleaner then deletes a superstep's files when its RDD
   *    is garbage-collected (the flag is read once at context creation,
   *    so it cannot be flipped here at runtime; CheckpointsSpec asserts

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Heavy-query scale smoke: run the most expensive operators (q22
@@ -128,11 +128,7 @@ object ScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = if (args.length > 1) args(1).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = SparkEntry.sweepSession(cpus)
       // Off-heap execution memory: the q121 wedge join's sort/shuffle
       // buffers were the round-10 GC-bimodality source (best-of-3 solo
       // reps spanned 2× run-to-run under G1). An interleaved A/B at 30×
@@ -199,9 +195,6 @@ object ScaleSmoke {
     val nDocs = docs.count()
     val nEmb = emb.count()
 
-    // same targeted-re-measure contract as Bench/Verify:
-    // SPARK_GRAFT_ONLY=q121,q56 runs only matching prefixes
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // Best-of-N reps per query (default 2), the Bench discipline scaled
     // down for a long suite: single-shot readings on a fresh JVM mix
     // janino compilation and GC debt into the number and swing ±2-3× on
@@ -216,9 +209,8 @@ object ScaleSmoke {
     // time: queries_sec IS the settled cost that scales with data.
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1").toInt
     def timed(name: String)(df: => DataFrame): (String, Double) = {
-      // ScaleSmoke names are already short (qNN): exact membership, so
-      // SPARK_GRAFT_ONLY=q21 never drags in q210-q215
-      if (!only.forall(_.contains(name))) return name -> -1.0
+      // same targeted re-measurement as Bench: SPARK_GRAFT_ONLY=q121,q56
+      if (!SparkEntry.selected(name)) return name -> -1.0
       def rep(): Double = {
         val scope = Caches.open()
         val t0 = System.nanoTime()

@@ -50,6 +50,30 @@ object SparkEntry {
     entries.SimilarityEntries.oracleSql,
     entries.WarehouseEntries.oracleSql))
 
+  /** The session the query sweeps (Bench, Verify, ScaleSmoke) run in:
+    * `local[cpus]` with one shuffle partition and one minimum file split
+    * per core, UTC, no UI, and the context cleaner deleting superseded
+    * reliable checkpoints (see [[Checkpoints]]). Callers add their own
+    * memory settings before `getOrCreate`.
+    */
+  def sweepSession(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.files.minPartitionNum", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // read once at context creation
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+
+  /** Whether the comma-separated query prefixes in `only` (the sweeps'
+    * `SPARK_GRAFT_ONLY`, e.g. `q105,q21`) select query `name`. A prefix
+    * matches the name itself or the name up to an underscore, so `q21`
+    * selects `q21_*` but never `q210_*`; unset selects every query.
+    */
+  def selected(name: String, only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Boolean =
+    only.forall(_.split(",").map(_.trim).exists(p => name == p || name.startsWith(p + "_")))
+
   /** Fold the per-family registries, refusing silent key collisions:
     * `++` would let two families register one query name and drop one
     * of them without a trace — the exact failure OracleCoverageSpec

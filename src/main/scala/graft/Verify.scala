@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,17 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // read once at context creation: with the reliable-checkpoint knob
-      // (spark.graft.checkpointDir) active, superseded superstep dirs are
-      // deleted when their RDDs are GC'd instead of growing unboundedly
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
+    val spark = SparkEntry.sweepSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the library's unpartitioned windows all read bounded grid/decile
     // relations (spec-pinned, q256) — WindowExec's per-invocation WARN
@@ -26,10 +15,6 @@ object Verify {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
-    // Optional local-iteration filter, same contract as Bench:
-    // SPARK_GRAFT_ONLY=q105,q106 runs only matching prefixes; unset = full
-    // sweep (driver mode always runs unset).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     def q(s: String): String = JsonEscape.quote(s)
     // A query that throws must be a LOUD red row, never a silent omission:
     // round 8's driver report simply lacked entries for 39 erroring queries
@@ -37,7 +22,8 @@ object Verify {
     // into errors.json beside the dumps so breakage is an explicit artifact.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+      // local iteration: SPARK_GRAFT_ONLY=q105,q106; unset = full sweep
+      .filter { case (name, _) => SparkEntry.selected(name) }
       .foreach { case (name, fn) =>
       // the parquet dump is the terminal action: scope the query and
       // release the caches its operators persisted for it (graft.Caches)

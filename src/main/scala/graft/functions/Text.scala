@@ -80,11 +80,4 @@ object Text {
       when(sc === best && best > 0, lang).otherwise(acc)
     }
   }
-
-  /** One-shot language-ID (argmax of marker hits over the words array).
-    * Convenience for tests/small data; prefer the two-stage form at scale
-    * (see langIdFromScores).
-    */
-  def langId(ws: Column): Column =
-    langIdFromScores(langMarkers.map { case (lang, ms) => lang -> markerHits(ws, ms) })
 }

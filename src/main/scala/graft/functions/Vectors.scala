@@ -42,12 +42,6 @@ object Vectors {
   /** Exact int64 squared L2 norm of a quantized vector. */
   def normSqQ(qa: Column): Column = dotQ(qa, qa)
 
-  /** Exact fixed-point dot product of two float-array columns (int64). */
-  def dotExact(a: Column, b: Column): Column = dotQ(quantVec(a), quantVec(b))
-
-  /** Exact fixed-point squared L2 norm (int64). */
-  def normSqExact(a: Column): Column = dotExact(a, a)
-
   /** Cosine from precomputed quantized dot and squared norms; the
     * int64→double conversions, sqrt and divide are single correctly-
     * rounded IEEE ops, identical across engines. (The 1e8 scale factors

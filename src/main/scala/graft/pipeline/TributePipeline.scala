@@ -170,25 +170,6 @@ object KVRegistry {
       else new InMemoryKVStore)
 }
 
-/** Hadoop Configuration is not Serializable; this wrapper ships it to
-  * executors via its own Writable encoding so distributed file operations
-  * (the forget-scrub's per-partition deletes) resolve the SAME FileSystem
-  * the driver would — scheme, credentials, and all.
-  */
-private[pipeline] final class SerializableHadoopConf(
-    @transient var conf: org.apache.hadoop.conf.Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.readFields(in)
-  }
-}
-
 /** The flagship continuous pipeline: stream-static enrich + two sinks
   * (reference: script/TributeStreamingJob.py:101-146), run by one runner,
   * [[run]]: `foreachBatch`, one Spark job per micro-batch, planned once per
@@ -514,10 +495,12 @@ object TributePipeline {
         val matches = s.read.text(logDir)
           .select(tid.as("tid"), input_file_name().as("path"))
           .filter(col("tid").isin(victims: _*))
+        // the session's Hadoop conf, so executors' deletes resolve the
+        // same FileSystem (scheme, credentials and all)
         val confBc = s.sparkContext.broadcast(
-          new SerializableHadoopConf(s.sparkContext.hadoopConfiguration))
+          new org.apache.spark.util.SerializableConfiguration(s.sparkContext.hadoopConfiguration))
         val counted = matches.rdd.mapPartitions { rows =>
-          val conf = confBc.value.conf
+          val conf = confBc.value.value
           rows.map { r =>
             if (delete) {
               val p = new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(1)))

@@ -79,18 +79,6 @@ object StreamingOps {
       .select(col("window.start").as("day"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Sliding 1-hour windows every 15 minutes (4× overlap ⇒ each row lands
-    * in 4 windows; Spark expands map-side, so the shuffle carries the
-    * pre-aggregated expansion, not raw rows).
-    */
-  def slidingHourly(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    withEventTime(events)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col("event_type"), col("n"))
-
   /** Streaming data-quality monitor: per tumbling window, how many
     * arriving events violate each contract clause (negative measure,
     * event type outside the declared vocabulary) alongside the window's

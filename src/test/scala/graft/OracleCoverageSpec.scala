@@ -60,4 +60,11 @@ class OracleCoverageSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("SPARK_GRAFT_ONLY selects by whole query-name prefix; unset selects everything") {
+    assert(SparkEntry.selected("q21_x", Some("q21")))
+    assert(SparkEntry.selected("q21", Some("q45, q21")))
+    assert(!SparkEntry.selected("q210_y", Some("q21")))
+    assert(SparkEntry.selected("q210_y", None))
+  }
 }

@@ -121,12 +121,19 @@ class SimilaritySpec extends SparkSpec {
   test("top-k plan: bounded map-side aggregate, no window over the full scored pairs") {
     val df = Similarity.annBruteForceTopK(
       graft.sources.Tables.embeddings(spark, sf0001), k = 10, nQueries = 10)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, ScalaAggregator}
+    val plan = df.queryExecution.executedPlan
+    val objectAggs = Plans.nodes(df).collect { case a: ObjectHashAggregateExec => a }
+    assert(objectAggs.nonEmpty,
       s"expected object-hash aggregation for bounded top-k, plan:\n$plan")
-    assert(plan.toLowerCase.contains("partial_boundedtopk"),
+    assert(objectAggs.exists(_.aggregateExpressions.exists(e => e.mode == Partial &&
+      (e.aggregateFunction match {
+        case s: ScalaAggregator[_, _, _] => s.agg.isInstanceOf[BoundedTopK]
+        case _ => false
+      }))),
       s"expected a map-side partial pass before the exchange, plan:\n$plan")
-    assert(!plan.contains("Window"),
+    assert(!Plans.nodes(df).exists(Plans.isWindow),
       s"per-query ranking must not window-sort the full pair set, plan:\n$plan")
   }
 

@@ -243,17 +243,11 @@ class StreamingReplaySpec extends SparkSpec {
       import java.util.concurrent.ConcurrentLinkedQueue
       import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
       import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
       import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
       import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
       import org.apache.spark.sql.util.QueryExecutionListener
 
-      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-        case s: QueryStageExec => s +: nodes(s.plan)
-        case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
-      }
       val fence = "graft.test.fence"
       val jobs = new ConcurrentLinkedQueue[(String, Long, String)]() // (query id, batch id, SQL execution id)
       val fences = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -331,11 +325,11 @@ class StreamingReplaySpec extends SparkSpec {
           s"batch $b: SQL executions ${executionsPerBatch(b)}, jobs ${byBatch(b.toLong)}")
       }
 
-      val scans = perBatch.map(_.flatMap(nodes).count(_.isInstanceOf[InMemoryTableScanExec]))
+      val scans = perBatch.map(_.flatMap(Plans.nodes).count(_.isInstanceOf[InMemoryTableScanExec]))
       assert(scans === Seq(2, 0, 0, 0),
         s"each dimension is read once, on the first data batch: $scans")
       perBatch.zipWithIndex.foreach { case (ps, b) =>
-        val all = ps.flatMap(nodes)
+        val all = ps.flatMap(Plans.nodes)
         assert(!all.exists(_.isInstanceOf[BroadcastExchangeLike]),
           s"batch $b rebroadcast a dimension:\n${ps.mkString("\n")}")
         assert(!all.exists(_.isInstanceOf[CollectLimitExec]),

@@ -52,10 +52,11 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("codeSwitchProfile plan: zero exchanges — the whole profile is one row-local projection") {
     val df = TextAnalysis.codeSwitchProfile(spark, sf0001)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
+    val plan = df.queryExecution.executedPlan
+    val ns = Plans.nodes(df)
+    assert(!ns.exists(Plans.isExchange),
       s"window slicing, argmax, and the switch walk are HOFs — no shuffle:\n$plan")
-    assert(!plan.contains("Join") && !plan.contains("Generate"),
+    assert(!ns.exists(p => Plans.isJoin(p) || p.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]),
       s"no explode, no join:\n$plan")
   }
 }

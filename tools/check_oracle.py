@@ -3,9 +3,10 @@
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [qPrefix,qPrefix,...]
 
-The optional third arg restricts checking to queries whose name starts
-with one of the given prefixes (matches Verify's SPARK_GRAFT_ONLY
-filter, so a filtered dump can be checked without noise).
+The optional third arg restricts checking to the queries one of the given
+prefixes selects: the name itself or the name up to an underscore, so
+q21 checks q21_* but not q210_* (Verify's SPARK_GRAFT_ONLY filter, so a
+filtered dump can be checked without noise).
 
 For each query dumped by `graft.Verify` (parquet dir per query +
 oracle_sql.json), runs the oracle SQL in DuckDB over the sfDir tables and
@@ -42,7 +43,7 @@ def main():
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for q in sorted(oracle):
-        if only is not None and not any(q.startswith(p) for p in only):
+        if only is not None and not any(q == p or q.startswith(p + "_") for p in only):
             continue
         pq = f"{out_dir}/{q}"
         if not os.path.isdir(pq):
